@@ -1,6 +1,6 @@
 """Benchmark harness (driver contract): run the catalog's headline queries
 at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] and print
-ONE JSON line: {"metric", "value", "unit", "queries": {...}, "sf"}. The
+ONE JSON line: {"metric", "value", "unit", "queries": {...}, "sf", "cpus"}. The
 stdout "queries" map holds only the 5 slowest (the driver's line capture
 truncates long lines); the full per-query map is written to bench_full.json.
 
@@ -95,6 +95,9 @@ def main() -> int:
         "value": total,
         "unit": "sec",
         "sf": sf_from_dir(SF_DIR),
+        # local[cpus] parallelism — totals from different core counts are
+        # not comparable
+        "cpus": cpus,
         "n_queries": len(timings),
         # The catalog GROWS across rounds; the normalized number keeps
         # round-over-round comparisons honest when the total covers more

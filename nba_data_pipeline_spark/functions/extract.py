@@ -166,10 +166,6 @@ MDTIME_PATTERN = r"(\d{1,2})/(\d{1,2})\s+(\d{1,2}):(\d{2})\s*(AM|PM)"
 ISO_PATTERN = r"(\d{4})-(\d{2})-(\d{2})[ T](\d{2}):(\d{2})"
 
 
-def _hour24(h12: Column, ampm: Column) -> Column:
-    return (h12 % 12) + F.when(ampm == "PM", 12).otherwise(0)
-
-
 def parse_game_time(
     c: Column, anchor_year: int = 2024, anchor_month: int = 6, anchor_day: int = 1
 ) -> Column:

@@ -110,8 +110,8 @@ def table_row_count(sf_dir: str, name: str) -> int | None:
 def table_col_minmax(sf_dir: str, name: str, col: str) -> tuple[int, int] | None:
     """(min, max) of ``col`` from parquet FOOTER statistics — a driver-side
     probe, zero data scan (same discipline as :func:`table_row_count`; on a
-    warehouse this is catalog column stats). Used by chunked layout builds
-    to derive key-range chunk bounds without a pre-pass over the fact.
+    warehouse this is catalog column stats). Used by the chunked oracle
+    tool to derive key-range chunk bounds without a pre-pass over the fact.
     Returns None when any row group lacks statistics for the column."""
     try:
         import pyarrow.parquet as pq
@@ -180,9 +180,3 @@ def write_partitioned_json(
     """SNK1/SNK2-style partitioned document sink (reference:
     Cleaning_Glass_#1.py:479-489 folder tree) as a native partitioned write."""
     df.write.mode(mode).partitionBy(*partition_cols).json(path)
-
-
-def write_partitioned_parquet(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)

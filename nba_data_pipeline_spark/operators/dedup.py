@@ -190,176 +190,3 @@ def frequent_shingle_filter(sh: DataFrame, max_doc_freq: int) -> DataFrame:
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     keep = freq.filter(F.col("df") <= max_doc_freq).select("shingle")
     return sh.join(F.broadcast(keep), "shingle")
-
-
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    t_num: int,
-    t_den: int,
-    n_slices: int = 1,
-    r: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """All doc pairs with shingle-Jaccard ≥ ``t_num/t_den`` — exact
-    :func:`jaccard_pairs`-at-threshold semantics with a 100 TB-shaped plan:
-    a SHUFFLE-FREE prefix filter generates candidates, sequential
-    hash-range slices bound every shuffle, and the exact verify touches
-    only the (tiny) candidate set. Returns the same columns as
-    ``jaccard_pairs`` (id_a, id_b, inter, sz_a, sz_b, jaccard).
-
-    **Candidate filter** (r-generalized prefix filtering, PPJoin family —
-    Xiao et al. WWW'08 Lemma 1 extended): under ANY global total order on
-    shingles, if ``|A∩B| ≥ α`` then the length-``(|X|−α+r)`` prefixes of A
-    and B share at least ``r`` elements. (Proof: order the prefixes; let
-    pa ≤ pb be their last elements; every common element ≤ pa lies in both
-    prefixes, so if fewer than r do, commons ≤ pa number ≤ r−1 while A has
-    only α−r elements past pa — total < α.) With the symmetric length
-    filter, α ≥ ⌈t·|X|⌉, so prefix length |X|−⌈t·|X|⌉+r suffices. The
-    i-th-smallest shared prefix token (i ≤ r) also obeys the positional
-    bound inter ≤ i + min(|A|−pos_a, |B|−pos_b) ≤ r + min(...), so
-    pre-filtering matched rows by the r-form bound and then requiring
-    ≥ r surviving matches per pair loses nothing.
-
-    **Why the HASH order**: classic PPJoin orders by document frequency so
-    prefixes hold the rarest tokens. That order costs a corpus-wide
-    df aggregation plus a per-doc ranking window — at 3000× (15M docs,
-    2.25B shingle rows) the window's exchange alone (~54 GB) out-spills
-    the box. The lemma is order-agnostic, so this plan orders by the
-    shingle's own 64-bit hash: each doc's prefix is a map-side
-    ``slice(array_sort(hashes), 1, plen)`` — ZERO shuffle to build.
-    Measured on the synthetic corpus at sf0.1 (5k docs, 1.13M co-occurring
-    pairs): df-order r=1 → 124.8k candidates; hash-order r=3 → 494
-    candidates vs 256 true edges, with no df pass at all. r=3 is the lever
-    that makes the cheap order competitive: pairs sharing only the odd
-    common-vocabulary shingle can never produce 3 shared prefix tokens.
-
-    **Slicing**: the prefix self-join on h runs as ``n_slices`` SEQUENTIAL
-    ``pmod(h, n)`` slices; each slice's matched pairs pre-aggregate to
-    (id_a, id_b, count) and land in a reliable (disk) checkpoint, which
-    truncates lineage so the slice's shuffle files are collectable before
-    the next slice runs. Peak scratch ≈ (2·|prefix|)/n_slices + staged
-    partials (≈ the pre-group fan-out, itself prefix-pruned). The shingle
-    UDF re-runs per slice — CPU traded for the disk bound; on a cluster
-    with storage headroom, stage the prefix relation once, partitioned by
-    the slice key, and scan one partition per slice.
-
-    **Verify**: candidate ids broadcast-semi-join the corpus, ONLY those
-    docs re-shingle into sorted hash arrays, and ``array_intersect``
-    computes the exact intersection per pair — identical arithmetic to
-    ``jaccard_pairs`` (hashed-shingle collision budget documented there).
-    At cluster scale swap the broadcast id filter for a shuffle semi-join
-    past ~10^8 candidate docs."""
-    spark = docs.sparkSession
-    if spark.sparkContext.getCheckpointDir() is None:
-        from nba_data_pipeline_spark.io import session_tmpdir
-
-        spark.sparkContext.setCheckpointDir(session_tmpdir("prefix_jacc_ckpt_"))
-
-    hs = F.array_sort(
-        F.transform(
-            distinct_word_shingles_fast(F.col(text_col), k),
-            lambda x: F.xxhash64(x),
-        )
-    )
-    base = docs.select(F.col(id_col).alias("did"), hs.alias("hs")).withColumn(
-        "sz", F.size("hs")
-    )
-    # prefix length for t = num/den: sz - ceil(sz*t) + r, via integer ceil
-    plen = (
-        F.col("sz")
-        - ((F.col("sz") * t_num + t_den - 1) / t_den).cast("long")
-        + r
-    )
-    prefix = base.select(
-        "did",
-        "sz",
-        F.posexplode(F.slice("hs", F.lit(1), plen)).alias("pos0", "h"),
-    ).select("did", "sz", (F.col("pos0") + 1).alias("pos"), "h")
-
-    pos_bound = (
-        r
-        + F.least(
-            F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
-        )
-    ) * (t_num + t_den) >= (F.col("a.sz") + F.col("b.sz")) * t_num
-
-    partials: list[DataFrame] = []
-    for s in range(n_slices):
-        p_s = (
-            prefix.filter(F.pmod(F.col("h"), F.lit(n_slices)) == s)
-            if n_slices > 1
-            else prefix
-        )
-        part = (
-            p_s.alias("a")
-            .join(
-                p_s.alias("b"),
-                (F.col("a.h") == F.col("b.h"))
-                & (F.col("a.did") < F.col("b.did"))
-                # symmetric length filter for t = num/den
-                & (F.col("a.sz") * t_den >= F.col("b.sz") * t_num)
-                & (F.col("b.sz") * t_den >= F.col("a.sz") * t_num)
-                & pos_bound,
-            )
-            .groupBy(
-                F.col("a.did").alias("id_a"), F.col("b.did").alias("id_b")
-            )
-            .agg(F.count(F.lit(1)).alias("ns"))
-        )
-        if n_slices > 1:
-            # reliable (DISK) checkpoint, not localCheckpoint: partials can
-            # reach ~10^8 rows at deep decades and the local variant stores
-            # deserialized heap objects first (measured OOM at sf100).
-            # Checkpointing also truncates lineage, so the slice's shuffle
-            # files become unreachable — the GC nudge lets the
-            # ContextCleaner drop them before the next slice shuffles.
-            part = part.checkpoint(eager=True)
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:  # noqa: BLE001 - cleaner lag only costs disk
-                pass
-        partials.append(part)
-    from functools import reduce
-
-    cand = (
-        reduce(DataFrame.unionByName, partials)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("ns").alias("ns"))
-        .filter(F.col("ns") >= r)
-        .select("id_a", "id_b")
-        # tiny by construction (r shared prefix tokens); materialize so the
-        # verify's three consumers don't re-run the candidate join
-        .localCheckpoint(eager=True)
-    )
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("did")
-    ).distinct()
-    docsets = base.join(F.broadcast(cand_ids), "did")
-    side_a = docsets.select(
-        F.col("did").alias("id_a"),
-        F.col("hs").alias("hs_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    side_b = docsets.select(
-        F.col("did").alias("id_b"),
-        F.col("hs").alias("hs_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    # shuffle-hash, not sort-merge: never sort the array-laden stream (the
-    # d9 sf100 lesson); the build side is the slim candidate relation.
-    inter = (
-        cand.join(side_a.hint("shuffle_hash"), "id_a")
-        .join(side_b.hint("shuffle_hash"), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= t_num / t_den)
-        .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
-    )

@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import (
-    read_table,
-    table_col_minmax,
-    table_row_count,
-)
+from nba_data_pipeline_spark.io import read_table, table_row_count
 from nba_data_pipeline_spark.operators.totalorder import (
     TOTAL_ORDER_SMALL_ROWS,
     bounded_window,
@@ -131,40 +127,6 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 query("flagship_hitrate_last10", oracle=FLAGSHIP_ORACLE)(flagship)
 
 
-#: one build chunk may claim this share of free scratch (exchange + sorted
-#: write spill land together; the rest belongs to whatever the session holds)
-_FLAGSHIP_CHUNK_DISK_SHARE = 0.25
-
-#: estimated scratch bytes per staged fact row during the build: ~40 B of
-#: columns (suppkey, quantity-decimal, date, orderkey, linenumber)
-#: serialized wider in the exchange, times two copies in flight (the
-#: shuffle files and the sorted-write spill coexist within a chunk)
-_FLAGSHIP_BUILD_BYTES_PER_ROW = 2 * 64
-
-
-def _flagship_build_chunk_count(sf_dir: str) -> int:
-    """Chunk count for the phase-wise bucketed-layout build: enough chunks
-    that one chunk's join exchange + sorted-write spill fits the scratch
-    budget (footer row count × per-row estimate vs free space under the
-    Spark scratch dir — the same probe discipline as the dedup miners).
-    1 (the one-shot build, unchanged small-sf behavior) whenever the whole
-    landing fits."""
-    import math
-    import shutil as _shutil
-
-    from nba_data_pipeline_spark.plans.dedup import _spark_scratch_dir
-
-    n_li = table_row_count(sf_dir, "lineitem")
-    if n_li is None:
-        return 1
-    try:
-        free = _shutil.disk_usage(_spark_scratch_dir()).free
-    except Exception:  # noqa: BLE001
-        free = 8 << 30
-    budget = max(free * _FLAGSHIP_CHUNK_DISK_SHARE, 1 << 30)
-    return min(64, max(1, math.ceil(n_li * _FLAGSHIP_BUILD_BYTES_PER_ROW / budget)))
-
-
 @query("flagship_hitrate_bucketed", oracle=FLAGSHIP_ORACLE)
 def flagship_hitrate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship over a MAINTAINED suppkey-bucketed staging layout —
@@ -183,15 +145,6 @@ def flagship_hitrate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster that is the routine maintenance write this entry's docstring
     exists to justify; per-run cost after it is shuffle-free.
 
-    The build itself is phase-wise past the scratch probe
-    (``_flagship_build_chunk_count``): the fact lands in sequential
-    JOIN-key-range chunks (both scan sides range-pruned, one bounded
-    exchange per chunk, overwrite-then-append) so the one-time layout
-    write also survives corpora whose single-shot shuffle out-spills the
-    box — the sf300 wall. Multi-chunk buckets read bucket-local but
-    unsorted; the window then pays an in-partition Sort, still ZERO
-    Exchange.
-
     Results identical to ``flagship_hitrate_last10`` (same oracle)."""
     from nba_data_pipeline_spark.plans.joins import bucketed_layout, sf_label
 
@@ -200,37 +153,9 @@ def flagship_hitrate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
 
-    def _chunk(lo=None, hi=None):
-        """One build chunk: BOTH sides filtered on the JOIN key range (not
-        just one side + constraint inference), so each side's parquet scan
-        prunes row groups — the testdata facts land ordered by orderkey,
-        making each chunk's scan ~1/N of the file, and each chunk's join
-        exchange ~1/N of the fact. Join-key chunking partitions the
-        equi-join exactly: a pair matches in chunk i iff its (equal) key
-        falls in range i."""
-        a, b = li, orders
-        if lo is not None:
-            a = a.filter(
-                (F.col("l_orderkey") >= lo) & (F.col("l_orderkey") < hi)
-            )
-            b = b.filter(
-                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-            )
-        return a.join(b, a.l_orderkey == b.o_orderkey).select(
-            "l_suppkey", "l_quantity", "o_orderdate", "l_orderkey", "l_linenumber"
-        )
-
-    chunks = None
-    n_chunks = _flagship_build_chunk_count(sf_dir)
-    if n_chunks > 1:
-        mm = table_col_minmax(sf_dir, "lineitem", "l_orderkey")
-        if mm is not None:
-            lo0, hi0 = mm
-            step = max(1, (hi0 - lo0 + n_chunks) // n_chunks)
-            chunks = [
-                _chunk(lo0 + i * step, lo0 + (i + 1) * step)
-                for i in range(n_chunks)
-            ]
+    joined = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "l_suppkey", "l_quantity", "o_orderdate", "l_orderkey", "l_linenumber"
+    )
     # Bucket count is the parallelism of every later window run — size it
     # to the fact (~30M rows ≈ 1 GB per bucket sort task), floored at the
     # fixture-scale 8 so small-SF plans are unchanged; production would
@@ -238,12 +163,11 @@ def flagship_hitrate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_li = table_row_count(sf_dir, "lineitem") or 0
     staged = bucketed_layout(
         spark,
-        _chunk(),
+        joined,
         f"bkt_flagship_{sf_label(sf_dir)}",
         "l_suppkey",
         sort_cols=["l_suppkey", "o_orderdate", "l_orderkey", "l_linenumber"],
         n_buckets=max(8, min(64, n_li // 30_000_000)),
-        build_chunks=chunks,
     )
     supplier = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     frame = (

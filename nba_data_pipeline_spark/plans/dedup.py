@@ -138,142 +138,36 @@ def d5_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-#: below this many documents the hashed-shingle relation is always
-#: persisted (the cache is kilobytes-to-low-GB and strictly an
-#: optimization); above it the decision is RESOURCE-AWARE — see
-#: _shingle_cache_fits.
+#: the hashed-shingle relation is persisted while the documents footer row
+#: count is at most this — the cache is kilobytes-to-low-GB there and
+#: strictly an optimization; past it the shingle pass streams.
 HASHED_SHINGLE_PERSIST_DOCS = 2_000_000
-
-#: estimated hashed-shingle cache bytes per document: ~150 distinct
-#: 3-shingles per synthetic doc x 20 B (doc_id, sz, hash) per exploded row
-#: (r11: +4 B for the map-side size column — see hashed_shingle_sets).
-_SHINGLE_CACHE_BYTES_PER_DOC = 150 * 20
-
-#: the cache may claim at most this share of the scratch volume's free
-#: space — the rest belongs to the join exchange it coexists with (the
-#: sf100 probe measured persist+exchange together overrunning the disk
-#: that either alone would fit).
-_SHINGLE_CACHE_DISK_SHARE = 0.2
-
-
-def _spark_scratch_dir() -> str:
-    """The directory Spark actually spills persists/exchanges to: the
-    first entry of SPARK_LOCAL_DIRS / spark.local.dir if set (they may
-    point at a different volume than the system tempdir — probing tempdir
-    there would read the wrong disk), else the system tempdir, which is
-    Spark's own default for local mode."""
-    import os as _os
-    import tempfile as _tempfile
-
-    env = _os.environ.get("SPARK_LOCAL_DIRS", "")
-    if env:
-        return env.split(",")[0]
-    try:  # active session's spark.local.dir, if one is up
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            conf = s.conf.get("spark.local.dir", "")
-            if conf:
-                return conf.split(",")[0]
-    except Exception:  # noqa: BLE001
-        pass
-    return _tempfile.gettempdir()
-
-
-def _shingle_cache_fits(n_docs: int) -> bool:
-    """Would the hashed-shingle cache fit comfortably beside its own join
-    exchange on the scratch volume? On a cluster this is per-executor
-    storage headroom; locally it is free space under the Spark scratch dir
-    (spark.local.dir / SPARK_LOCAL_DIRS when configured — see
-    _spark_scratch_dir). Measured both ways at sf100 (5M docs, ~12 GB
-    cache): with ~27 GB free the cached run beat streaming 242 s vs 445 s
-    (r8 box state); with the cache + exchange overrunning a 39 GB-free
-    disk it OOS-failed — so the probe, not a fixed doc count, decides."""
-    import shutil as _shutil
-
-    try:
-        free = _shutil.disk_usage(_spark_scratch_dir()).free
-    except Exception:  # noqa: BLE001
-        return False
-    return n_docs * _SHINGLE_CACHE_BYTES_PER_DOC <= free * _SHINGLE_CACHE_DISK_SHARE
 
 
 def _hashed_shingles_adaptive(sf_dir: str, d):
     """hashed_shingle_sets over ``d``, persisted only while the footer
-    row count / free-scratch probe says the cache is an optimization
-    rather than a liability (the geo1 footer-probe discipline). Past the
-    cutover the streaming shingle pass re-runs per consumer — exchange
-    reuse already shares the expensive join-side exchange."""
+    row count says the cache is an optimization rather than a liability
+    (the geo1 footer-probe discipline). Past the cutover the streaming
+    shingle pass re-runs per consumer — exchange reuse already shares the
+    expensive join-side exchange."""
     from nba_data_pipeline_spark.io import table_row_count
 
     sh = hashed_shingle_sets(d)
     n_docs = table_row_count(sf_dir, "documents")
-    if n_docs is None or n_docs <= HASHED_SHINGLE_PERSIST_DOCS or _shingle_cache_fits(n_docs):
+    if n_docs is None or n_docs <= HASHED_SHINGLE_PERSIST_DOCS:
         sh = sh.persist()
     return sh
 
 
-#: the sliced edge miner may claim this share of free scratch per slice
-#: (both join sides of one slice land together; the rest of the volume
-#: belongs to the staged pair partials and whatever else the session holds).
-_CC_SLICE_DISK_SHARE = 0.25
-
-#: estimated prefix-relation bytes per document, one join side: ~75 prefix
-#: rows (half the ~150 distinct 3-shingles, +r) × 32 B (did, sz, pos, h).
-_CC_PREFIX_BYTES_PER_DOC = 75 * 32
-
-
-def _cc_slice_count(n_docs: int) -> int:
-    """Slice count for the spill-bounded edge miner: enough slices that
-    one slice's two-sided prefix exchange fits the scratch budget."""
-    import math
-    import shutil as _shutil
-
-    est = n_docs * _CC_PREFIX_BYTES_PER_DOC  # one join side's bytes
-    try:
-        free = _shutil.disk_usage(_spark_scratch_dir()).free
-    except Exception:  # noqa: BLE001
-        free = 8 << 30
-    budget = max(free * _CC_SLICE_DISK_SHARE, 1 << 30)
-    return min(32, max(1, math.ceil(2 * est / budget)))
-
-
-def cc_edges(spark: SparkSession, sf_dir: str, d: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
+def cc_edges(sf_dir: str, d: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
     """Near-dup edge mining for the D6 closure entries (and their sampled
-    checker): exact Jaccard ≥ ``min_jaccard`` (a dyadic rational — 0.5
-    here) over hashed 3-word shingles, as (src, dst) with src < dst.
-
-    Size-adaptive in the footer-probe discipline: while the hashed-shingle
-    cache fits beside its own join exchange (``_shingle_cache_fits``) the
-    persisted single-join plan runs (the measured-fast path through small
-    corpora — the any-shared-shingle fan-out IS the candidate generator
-    there and the whole graph fits one shuffle); past it the miner
-    switches to ``prefix_jaccard_pairs`` — the r-generalized prefix filter
-    over the shingle-hash order (zero-shuffle prefixes, sequential
-    hash-range slices sized by the free-scratch probe, exact array verify
-    on the candidate set). Identical edge sets either way: the prefix
-    filter is lossless at the threshold and the verify recomputes exact
-    Jaccard."""
-    from fractions import Fraction
-
-    from nba_data_pipeline_spark.io import table_row_count
-    from nba_data_pipeline_spark.operators.dedup import prefix_jaccard_pairs
-
-    n_docs = table_row_count(sf_dir, "documents")
-    if (
-        n_docs is None
-        or n_docs <= HASHED_SHINGLE_PERSIST_DOCS
-        or _shingle_cache_fits(n_docs)
-    ):
-        sh = _hashed_shingles_adaptive(sf_dir, d)
-        pairs = jaccard_pairs(sh, min_jaccard=min_jaccard)
-    else:
-        t = Fraction(min_jaccard).limit_denominator(1024)
-        pairs = prefix_jaccard_pairs(
-            d, t.numerator, t.denominator, n_slices=_cc_slice_count(n_docs)
-        )
+    checker): exact Jaccard ≥ ``min_jaccard`` over hashed 3-word shingles,
+    as (src, dst) with src < dst — one shingle equi-join
+    (``jaccard_pairs``) over the footer-gated shingle relation
+    (``_hashed_shingles_adaptive``). The any-shared-shingle fan-out is the
+    candidate generator and the whole graph fits one shuffle."""
+    sh = _hashed_shingles_adaptive(sf_dir, d)
+    pairs = jaccard_pairs(sh, min_jaccard=min_jaccard)
     return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
 
 
@@ -661,9 +555,7 @@ def d5_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # Size-adaptive edge miner (persisted single join vs spill-bounded
-    # sequential slices) — see cc_edges.
-    edges = cc_edges(spark, sf_dir, d)
+    edges = cc_edges(sf_dir, d)
     # DSU treats edges as undirected — no symmetrize union needed.
     labels = connected_components(edges, num_partitions=1)
     from pyspark.sql import Window as W
@@ -686,11 +578,14 @@ def d5_cc_clusters_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5e at the CLUSTER-SCALE setting: identical semantics (and oracle) to
     ``d5_cc_clusters`` but the closure runs ``connected_components`` with
     ``num_partitions=4`` — the sharded-DSU path a 100 TB near-dup subgraph
-    actually takes: per-partition union-find, edge contraction between
-    rounds, O(log P) convergence. Catalog-level proof that the
-    multi-partition contraction loop reaches the same fixpoint the
-    recursive-CTE oracle computes (the 1-partition variant exercises only
-    the single-pass fast path)."""
+    actually takes. With the documents footer count as ``node_bound``, any
+    corpus up to 500k documents (4 × n_docs within the operator's
+    ``finish_threshold``) takes the TWO-LEVEL form: four parallel local
+    DSUs, then one single-task DSU over their pointer rows. Catalog-level
+    proof that the sharded local pass plus the pointer-row merge reaches
+    the same fixpoint the recursive-CTE oracle computes (the 1-partition
+    variant exercises only the single-pass fast path). Past the bound
+    (sf30 and up) the general contraction loop runs instead."""
     # single-row-group table: shuffle raw text once so the Python
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
@@ -699,9 +594,7 @@ def d5_cc_clusters_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # Size-adaptive edge miner (persisted single join vs spill-bounded
-    # sequential slices) — see cc_edges.
-    edges = cc_edges(spark, sf_dir, d)
+    edges = cc_edges(sf_dir, d)
     # node_bound: every graph node is a doc_id, so the documents footer
     # count bounds the per-partition pointer table. Below the threshold
     # the closure is the TWO-LEVEL sharded DSU (4 parallel local DSUs,

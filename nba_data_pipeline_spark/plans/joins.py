@@ -422,25 +422,12 @@ def bucketed_layout(
     key: str,
     sort_cols: list[str] | None = None,
     n_buckets: int | None = None,
-    build_chunks: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Land ``df`` once as an external table bucketed (and sorted) by
     ``key`` and return the table — the maintained-LAYOUT primitive behind
     j10's co-located join and the flagship's exchange-free per-supplier
     window. The write pays the one shuffle a repeated query would
     otherwise pay every run; every later read is bucket-local.
-
-    ``build_chunks``: the PHASE-WISE build for facts whose one-shot landing
-    shuffle exceeds scratch (the flagship's sf300 single-box wall). Each
-    chunk is a DataFrame covering a disjoint slice of the rows (the caller
-    chunks by key ranges of the upstream JOIN key so parquet row-group
-    pruning bounds each chunk's scan as well as its shuffle); chunks write
-    SEQUENTIALLY — first overwrite, rest append — so peak scratch is one
-    chunk's exchange + sorted-write spill, never the whole fact. Appending
-    leaves multiple files per bucket, which Spark reads bucket-local but
-    no longer reports as sorted: downstream plans keep the Exchange-free
-    scan and pay an in-partition Sort — exactly the cost model a
-    cluster-maintained layout has after any incremental load.
 
     Written as an EXTERNAL table at an absolute temp path: the default
     managed location lives under spark.sql.warehouse.dir, which resolves
@@ -455,14 +442,13 @@ def bucketed_layout(
         loc = f"{tempfile.gettempdir()}/spark_graft_bucketed/{tname}"
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
         shutil.rmtree(loc, ignore_errors=True)
-        for i, part in enumerate(build_chunks or [df]):
-            (
-                part.write.bucketBy(n_buckets or _N_BUCKETS, key)
-                .sortBy(*(sort_cols or [key]))
-                .option("path", loc)
-                .mode("overwrite" if i == 0 else "append")
-                .saveAsTable(tname)
-            )
+        (
+            df.write.bucketBy(n_buckets or _N_BUCKETS, key)
+            .sortBy(*(sort_cols or [key]))
+            .option("path", loc)
+            .mode("overwrite")
+            .saveAsTable(tname)
+        )
         _BUCKETED.add(tname)
     return spark.table(tname)
 

@@ -30,132 +30,6 @@ from nba_data_pipeline_spark.plans.registry import ROUND_DIGITS, query
 MIN_ITEM_SUPPORT = 5
 MIN_PAIR_SUPPORT = 3
 
-#: estimated pair-aggregate exchange bytes per LINEITEM row for the mb1
-#: spill probe: a basket with k frequent items fans each item out to ~k
-#: pair partials of ~24 B; k≈4 on this data ⇒ ~100 B/row, and the pair
-#: exchange — not the input shuffle — is what out-spills a box at deep
-#: decades (≈180 GB at sf300).
-_MB1_PAIR_BYTES_PER_ROW = 100
-
-#: one pair-agg slice may claim this share of free scratch (the slice's
-#: exchange + its checkpointed survivors land together)
-_MB1_SLICE_DISK_SHARE = 0.25
-
-
-def _mb1_slice_count(sf_dir: str) -> int:
-    """Sequential pair-aggregation slices so no single exchange holds the
-    full Σk² pair mass — 1 (the single-shot plan, unchanged small-SF
-    behavior) whenever the whole pair exchange fits the scratch budget."""
-    import math
-    import shutil as _shutil
-
-    from nba_data_pipeline_spark.io import table_row_count
-    from nba_data_pipeline_spark.plans.dedup import _spark_scratch_dir
-
-    n_li = table_row_count(sf_dir, "lineitem")
-    if n_li is None:
-        return 1
-    try:
-        free = _shutil.disk_usage(_spark_scratch_dir()).free
-    except Exception:  # noqa: BLE001
-        free = 8 << 30
-    budget = max(free * _MB1_SLICE_DISK_SHARE, 1 << 30)
-    return min(32, max(1, math.ceil(n_li * _MB1_PAIR_BYTES_PER_ROW / budget)))
-
-
-def _mb1_pairs_sliced(
-    spark: SparkSession, sf_dir: str, fitems: DataFrame, n_slices: int
-) -> DataFrame:
-    """mb1's pair mining with every shuffle spill-bounded — the deep-decade
-    path the scratch probe selects when the one-shot pair exchange (Σk²
-    pair partials, ≈180 GB at sf300) would out-spill the box. Exact same
-    (p1, p2, support) multiset as the single-shot plan.
-
-    Two moves, both from this round's layout playbook:
-
-    1. **Stage fitems ONCE bucketed by l_orderkey**
-       (``plans/joins.bucketed_layout``, chunk-built past its own probe):
-       the pair self-join is then bucket-to-bucket over one table — scan →
-       in-partition sort → SortMergeJoin with NO Exchange below the join
-       (the j10 contract), so the 2×-fact join shuffle disappears from
-       every slice instead of being paid n_slices times.
-    2. **Sequential p1-hash slices of the pair AGGREGATE**: slice s keeps
-       pairs with pmod(xxhash64(p1), n)=s — a partition of the GROUP key,
-       so per-slice HAVING is exact — and its survivors land in a reliable
-       checkpoint, truncating lineage so the slice's (1/n-sized) exchange
-       files are collectable before the next slice runs. Survivors are
-       support ≥ 3 rows: tiny by construction.
-
-    On a cluster the staging write is the routine maintained layout and the
-    slices are one job each; single-box peak scratch ≈ staged table +
-    (pair exchange)/n + checkpointed survivors."""
-    from nba_data_pipeline_spark.io import table_col_minmax, table_row_count, session_tmpdir
-    from nba_data_pipeline_spark.plans.joins import bucketed_layout, sf_label
-
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(session_tmpdir("mb1_slices_ckpt_"))
-
-    n_li = table_row_count(sf_dir, "lineitem") or 0
-    # chunk the staging WRITE by orderkey ranges when one shot of its
-    # exchange would blow the same budget (each chunk's distinct+prune is
-    # exact: l_orderkey is in the distinct key and chunks partition it)
-    build_chunks = None
-    n_build = max(1, n_slices // 2)
-    if n_build > 1:
-        mm = table_col_minmax(sf_dir, "lineitem", "l_orderkey")
-        if mm is not None:
-            lo0, hi0 = mm
-            step = max(1, (hi0 - lo0 + n_build) // n_build)
-            build_chunks = [
-                fitems.filter(
-                    (F.col("l_orderkey") >= lo0 + i * step)
-                    & (F.col("l_orderkey") < lo0 + (i + 1) * step)
-                )
-                for i in range(n_build)
-            ]
-    staged = bucketed_layout(
-        spark,
-        fitems,
-        f"bkt_mb1_fitems_{sf_label(sf_dir)}",
-        "l_orderkey",
-        sort_cols=["l_orderkey", "l_partkey"],
-        n_buckets=max(8, min(64, n_li // 30_000_000)),
-        build_chunks=build_chunks,
-    )
-    partials: list[DataFrame] = []
-    for s in range(n_slices):
-        part = _mb1_slice_pairs(staged, s, n_slices).checkpoint(eager=True)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 - cleaner lag only costs disk
-            pass
-        partials.append(part)
-    from functools import reduce
-
-    return reduce(DataFrame.unionByName, partials)
-
-
-def _mb1_slice_pairs(staged: DataFrame, s: int, n_slices: int) -> DataFrame:
-    """One pair-agg slice over the bucketed fitems staging table — factored
-    out (the s9/s11 batch-contract pattern) so its PLAN is assertable with
-    plain frames: the self-join must be bucket-to-bucket SortMergeJoin
-    with no Exchange below it (tests/test_plan_shapes.py), which
-    checkpoint-eager execution inside ``_mb1_pairs_sliced`` would hide."""
-    a = staged.select(
-        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1")
-    )
-    b = staged.select(
-        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2")
-    )
-    return (
-        a.filter(F.pmod(F.xxhash64("p1"), F.lit(n_slices)) == s)
-        .join(b.hint("merge"), "k")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= MIN_PAIR_SUPPORT)
-    )
-
 
 @query(
     "mb1_frequent_pairs",
@@ -214,42 +88,20 @@ def mb1_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sup1 = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
     freq = sup1.filter(F.col("s") >= MIN_ITEM_SUPPORT).persist()
-    n_slices = _mb1_slice_count(sf_dir)
-    if n_slices > 1:
-        # The support pass's full-fact distinct exchange stays pinned on
-        # disk as long as freq's LINEAGE references it — ~10 GB of shuffle
-        # files coexisting with the staging build was the sf300 no-space
-        # failure. A reliable checkpoint of the PART-GRAIN freq (<1 GB)
-        # truncates that lineage; the GC nudge lets the ContextCleaner
-        # drop the fact exchange before the staging write needs the space.
-        from nba_data_pipeline_spark.io import session_tmpdir
-
-        if spark.sparkContext.getCheckpointDir() is None:
-            spark.sparkContext.setCheckpointDir(
-                session_tmpdir("mb1_slices_ckpt_")
-            )
-        freq = freq.checkpoint(eager=True)
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
     fitems = items.join(F.broadcast(freq.select("l_partkey")), "l_partkey")
-    if n_slices == 1:
-        a = fitems.select(
-            F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1")
-        )
-        b = fitems.select(
-            F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2")
-        )
-        pairs = (
-            a.join(b, "k")
-            .filter(F.col("p1") < F.col("p2"))
-            .groupBy("p1", "p2")
-            .agg(F.count(F.lit(1)).alias("support"))
-            .filter(F.col("support") >= MIN_PAIR_SUPPORT)
-        )
-    else:
-        pairs = _mb1_pairs_sliced(spark, sf_dir, fitems, n_slices)
+    a = fitems.select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1")
+    )
+    b = fitems.select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2")
+    )
+    pairs = (
+        a.join(b, "k")
+        .filter(F.col("p1") < F.col("p2"))
+        .groupBy("p1", "p2")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .filter(F.col("support") >= MIN_PAIR_SUPPORT)
+    )
     n = items.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     f1 = freq.select(F.col("l_partkey").alias("p1"), F.col("s").alias("s1"))
     f2 = freq.select(F.col("l_partkey").alias("p2"), F.col("s").alias("s2"))

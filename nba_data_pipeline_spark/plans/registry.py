@@ -77,14 +77,12 @@ _FRONT: tuple[str, ...] = (
     # entries, 35 fit this round, the alphabetical tail rolls to r12), so
     # verification debt ages out instead of accumulating.
     #
-    # --- changed r11: size-adaptive cc edge miner (persisted shingle
-    # equi-join below the scratch probe, spill-bounded r-generalized
-    # prefix-filter slices past it — operators/dedup.prefix_jaccard_pairs) ---
+    # --- changed: cc edge miner is the one hashed-shingle equi-join
+    # (plans/dedup.cc_edges) ---
     "d5_cc_clusters",
     "d5_cc_clusters_multipart",
-    # --- changed r11: phase-wise bucketed-layout build (join-key-range
-    # chunks, overwrite-then-append past the scratch probe); j10 shares
-    # bucketed_layout ---
+    # --- changed: bucketed-layout build is one overwrite write; j10
+    # shares bucketed_layout ---
     "flagship_hitrate_bucketed",
     "j10_bucketed_join",
     # --- changed r11: g7 small-layout/lazy-pin discipline on the edge list ---
@@ -92,8 +90,7 @@ _FRONT: tuple[str, ...] = (
     # --- changed r11: recency-anchor job removed (NTILE rides last_order
     # ASC — identical tiles, one fewer full pass) ---
     "a43_rfm_segmentation",
-    # --- changed r11: spill-bounded pair mining past the scratch probe
-    # (bucketed fitems staging + sequential p1-hash pair-agg slices) ---
+    # --- changed: pair mining is the single-shot self-join only ---
     "mb1_frequent_pairs",
     # --- changed r11: batch-UDF spread + scoped small-shuffle drain +
     # landing-schema cache (s11); schema cache touches every

@@ -13,6 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's physical memory (MemTotal in /proc/meminfo),
+    capped at 16g — a local-mode driver heap that leaves room for the
+    Python workers and the page cache. 16g where /proc is unreadable."""
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(cap_mb, total_mb // 2)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "nba_data_pipeline_spark",
     cpus: int | None = None,
@@ -21,9 +37,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. On a real cluster
-    the master/resource settings come from spark-submit; everything set here
-    is master-agnostic except ``local[N]``.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores, and the driver heap
+    to $SPARK_DRIVER_MEMORY or half the host's memory (at most 16g). On a
+    real cluster the master/resource settings come from spark-submit;
+    everything set here is master-agnostic except ``local[N]``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -41,7 +58,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

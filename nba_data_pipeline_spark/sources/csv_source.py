@@ -27,15 +27,3 @@ def read_csv_clean(spark: SparkSession, path: str) -> DataFrame:
             for c, t in df.dtypes
         ]
     )
-
-
-def csv_to_json_envelope(
-    spark: SparkSession, csv_path: str, json_path: str, metadata: dict[str, str]
-) -> None:
-    """SNK5: CSV → JSON with a metadata envelope
-    (ctg_export_league.py:403-431): each row becomes {metadata, data}."""
-    df = read_csv_clean(spark, csv_path)
-    meta = F.struct(*[F.lit(v).alias(k) for k, v in metadata.items()])
-    df.select(
-        meta.alias("metadata"), F.struct(*[F.col(c) for c in df.columns]).alias("data")
-    ).write.mode("overwrite").json(json_path)

@@ -41,18 +41,6 @@ def dedupe_on_arrival(
     return df.withWatermark(event_time, delay).dropDuplicates([*keys, event_time])
 
 
-def tumbling_counts(
-    df: DataFrame, event_time: str, window: str = "1 day", delay: str = "1 hour"
-) -> DataFrame:
-    """S6 (streaming form): watermarked tumbling-window aggregation."""
-    return (
-        df.withWatermark(event_time, delay)
-        .groupBy(F.window(event_time, window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
 def run_available_now(
     sdf: DataFrame, sink_dir: str, checkpoint_dir: str, fmt: str = "parquet"
 ) -> None:

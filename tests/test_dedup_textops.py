@@ -77,58 +77,6 @@ def test_jaccard_pairs_hashed_sz_fast_path(docs):
     assert fast == slow and (1, 2) in fast
 
 
-def test_prefix_jaccard_pairs_matches_plain(spark):
-    """The prefix-filtered miner must reproduce jaccard_pairs-at-threshold
-    exactly for every slice count and r — the r-prefix filter is lossless
-    and the slice partition is exact (near-dup cluster of 3, one pair,
-    vocabulary-overlap decoys, an empty-shingle doc)."""
-    from nba_data_pipeline_spark.operators.dedup import (
-        hashed_shingle_sets,
-        prefix_jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "the quick brown fox jumps over a lazy cat"),
-            (4, "completely different words entirely here now"),
-            (5, "completely different words entirely here too"),
-            (6, "ab"),
-            # decoy: shares vocabulary shingles with 1-3 but far below t
-            (7, "the quick brown tortoise naps under a shady oak tree"),
-        ],
-        ["doc_id", "text"],
-    )
-    for t_num, t_den in ((1, 2), (1, 4)):
-        want = {
-            (r.id_a, r.id_b): (r.inter, r.jaccard)
-            for r in jaccard_pairs(
-                hashed_shingle_sets(docs), min_jaccard=t_num / t_den
-            ).collect()
-        }
-        assert want, (t_num, t_den)  # fixture must actually produce pairs
-        for n_slices in (1, 3):
-            for r_ in (1, 2, 3):
-                got = {
-                    (row.id_a, row.id_b): (row.inter, row.jaccard)
-                    for row in prefix_jaccard_pairs(
-                        docs, t_num, t_den, n_slices=n_slices, r=r_
-                    ).collect()
-                }
-                assert got == pytest.approx(want), (t_num, t_den, n_slices, r_)
-
-
-def test_cc_slice_count_scales_with_corpus():
-    from nba_data_pipeline_spark.plans.dedup import _cc_slice_count
-
-    small = _cc_slice_count(10_000)
-    big = _cc_slice_count(500_000_000)
-    assert small >= 1
-    assert big == 32  # capped
-    assert _cc_slice_count(15_000_000) >= small
-
-
 def test_keep_first_deterministic(spark):
     df = spark.createDataFrame(
         [("k", 3, "c"), ("k", 1, "a"), ("k", 2, "b"), ("j", 9, "z")],

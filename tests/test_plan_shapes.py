@@ -112,81 +112,6 @@ def test_flagship_bucketed_window_is_exchange_free(spark):
     assert "Bucketed: true" in phys[scan_pos : scan_pos + 400]
 
 
-def test_mb1_sliced_pair_miner_matches_single_shot(spark, monkeypatch):
-    """The spill-bounded mb1 path (bucketed fitems staging + sequential
-    p1-hash pair-agg slices) must reproduce the single-shot plan's rows
-    exactly, and its pair self-join must run bucket-to-bucket with no
-    Exchange below the SortMergeJoin (the j10 contract)."""
-    import nba_data_pipeline_spark.plans.mining_plans as M
-    from nba_data_pipeline_spark.plans import joins as J
-    from nba_data_pipeline_spark.plans.joins import sf_label
-
-    specs = load_all()
-    want = {
-        tuple(r) for r in specs["mb1_frequent_pairs"].fn(spark, SF_DIR).collect()
-    }
-    assert want  # fixture must produce frequent pairs
-
-    monkeypatch.setattr(M, "_mb1_slice_count", lambda _sf: 3)
-    J._BUCKETED.discard(f"bkt_mb1_fitems_{sf_label(SF_DIR)}")
-    df = specs["mb1_frequent_pairs"].fn(spark, SF_DIR)
-    got = {tuple(r) for r in df.collect()}
-    assert got == want
-
-    # the checkpoint-eager slices hide their own plans in df; assert the
-    # factored slice plan directly over the (now-built) staging table
-    staged = spark.table(f"bkt_mb1_fitems_{sf_label(SF_DIR)}")
-    phys = plan_string(M._mb1_slice_pairs(staged, 0, 3)).split(
-        "== Physical Plan =="
-    )[-1]
-    join_pos = phys.index("SortMergeJoin")
-    scan_pos = phys.index("bkt_mb1_fitems", join_pos)
-    assert "Exchange" not in phys[join_pos:scan_pos]
-    J._BUCKETED.discard(f"bkt_mb1_fitems_{sf_label(SF_DIR)}")
-
-
-def test_flagship_bucketed_chunked_build_same_result_still_exchange_free(
-    spark, monkeypatch
-):
-    """The phase-wise layout build (sequential join-key-range chunks, the
-    sf300 scratch remedy) must land byte-identical RESULTS and keep the
-    window's Exchange-free contract — multi-file buckets cost an
-    in-partition Sort, never a shuffle."""
-    import nba_data_pipeline_spark.plans.analytics as A
-    from nba_data_pipeline_spark.plans import joins as J
-
-    specs = load_all()
-    want = {
-        tuple(r)
-        for r in specs["flagship_hitrate_last10"].fn(spark, SF_DIR).collect()
-    }
-
-    monkeypatch.setattr(A, "_flagship_build_chunk_count", lambda _sf: 3)
-    # evict any layout a previous test built so the chunked build runs
-    from nba_data_pipeline_spark.plans.joins import sf_label
-
-    J._BUCKETED.discard(f"bkt_flagship_{sf_label(SF_DIR)}")
-    df = specs["flagship_hitrate_bucketed"].fn(spark, SF_DIR)
-    got = {tuple(r) for r in df.collect()}
-    assert got == want
-
-    phys = plan_string(df).split("== Physical Plan ==")[-1]
-    win_pos = phys.rindex("Window")
-    scan_pos = phys.index("bkt_flagship", win_pos)
-    assert "Exchange" not in phys[win_pos:scan_pos]
-    assert "Bucketed: true" in phys[scan_pos : scan_pos + 400]
-    # and the chunked table must hold >1 file per bucket (the append path
-    # actually ran) — otherwise this test silently re-checked the one-shot
-    import glob
-    import tempfile
-
-    tname = f"bkt_flagship_{sf_label(SF_DIR)}"
-    files = glob.glob(f"{tempfile.gettempdir()}/spark_graft_bucketed/{tname}/*.parquet")
-    assert len(files) > J._N_BUCKETS
-    # leave a fresh one-shot layout behind for any later test in the session
-    J._BUCKETED.discard(tname)
-
-
 # The 12 r4-session additions (plans/registry.py r5-queue note): never
 # driver-checked until their r5 rotation slot, so each holds the same
 # structural contract — plan-clean + a fingerprint naming the node that

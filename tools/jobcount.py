@@ -9,6 +9,12 @@ Method: each entry runs under its own job group; the statusTracker's
 getJobIdsForGroup(group) gives the exact job ids launched by the entry's
 second (warm) execution. The first execution warms caches/codegen so the
 count reflects the steady-state plan, matching bench.py's min-of-2 metric.
+
+Job groups are thread-local properties of the SparkContext: only jobs
+submitted from the thread that set the group are counted, so an entry that
+launches jobs from its own worker threads under-reports. The group is
+cleared by unsetting the ``spark.jobGroup.id`` local property directly —
+``setJobGroup(None, None)`` is not a supported way to clear it.
 """
 
 from __future__ import annotations
@@ -66,12 +72,14 @@ def main() -> int:
             ).save()
             group = f"jc:{name}"
             sc.setJobGroup(group, name)
-            t0 = time.time()
-            specs[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.time() - t0
-            sc.setJobGroup(None, None)
+            try:
+                t0 = time.time()
+                specs[name].fn(spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                dt = time.time() - t0
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             jobs = sc.statusTracker().getJobIdsForGroup(group)
             out[name] = {"jobs": len(jobs), "sec_warm": round(dt, 2)}
             print(f"{name}: jobs={len(jobs)} sec_warm={dt:.2f}", flush=True)

@@ -368,16 +368,15 @@ def check_d5_cc(spark, con, sf_dir: str, k_pairs: int, k_anchors: int) -> list[s
     from nba_data_pipeline_spark.plans.dedup import _SQL_SH_REL, cc_edges
 
     # Same edge construction as the entry (plans/dedup.py cc_edges): the
-    # size-adaptive miner — persisted hashed-shingle equi-join on small
-    # corpora, spill-bounded sequential slices past the scratch probe (the
-    # checker's former unsliced string-shingle persist was itself the
-    # sf300 wall; the checker must scale wherever the entry does).
+    # hashed-shingle equi-join, its shingle relation persisted only up to
+    # the footer-count cutover — so the checker mines edges exactly the
+    # way the entry does.
     d = (
         read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    edges_df = cc_edges(spark, sf_dir, d)
+    edges_df = cc_edges(sf_dir, d)
     edges = edges_df.toPandas()
 
     # --- 1. closure: exact union-find over the engine's edges -------------
@@ -858,8 +857,8 @@ def check_flagship(
 
     ``entry`` selects which flagship twin supplies the ENGINE side —
     ``flagship_hitrate_bucketed`` runs the identical contract over the
-    maintained bucketed layout (its sf300 "done" check: the phase-wise
-    chunked build + exchange-free window, verified sampled)."""
+    maintained bucketed layout (the exchange-free window over the
+    one-shot layout build, verified sampled)."""
     problems: list[str] = []
     qs = entrymod.queries()
     eng = qs[entry](spark, sf_dir).toPandas()
