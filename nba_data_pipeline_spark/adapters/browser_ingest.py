@@ -242,7 +242,7 @@ def wait_for_download(
             # the reference's loop swallows errors and keeps polling, so a
             # vanished file is a retry, not a crash.
             try:
-                latest = max(complete, key=os.path.getmtime)
+                latest = max(complete, key=lambda p: os.stat(p).st_mtime_ns)
                 size1 = os.path.getsize(latest)
                 sleep(poll_s / 2)
                 size2 = os.path.getsize(latest)

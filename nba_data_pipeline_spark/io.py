@@ -7,6 +7,7 @@ SNK1-SNK6) but Spark-native: columnar parquet in, ``partitionBy`` out.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -144,26 +145,83 @@ def table_col_minmax(sf_dir: str, name: str, col: str) -> tuple[int, int] | None
         return None
 
 
+def table_stamp(sf_dir: str, name: str) -> int:
+    """Change stamp of a landed table, the key for caches derived from it.
+    For a single-file table this is its mtime. For a DIRECTORY table the
+    directory's own mtime only moves when entries are added/removed —
+    rewriting a part-file in place keeps it — so hash the contained
+    files' (name, size, mtime) listing instead; any in-place rewrite
+    changes the stamp."""
+    p = table_path(sf_dir, name)
+    st = os.stat(p)
+    if not os.path.isdir(p):
+        return st.st_mtime_ns
+    h = 0
+    for entry in sorted(os.listdir(p)):
+        fs = os.stat(os.path.join(p, entry))
+        h = hash((h, entry, fs.st_size, fs.st_mtime_ns))
+    return h
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """Whether the parquet footer of ``path`` (a file, or the first part
+    file of a directory) types ``ts`` as TIMESTAMP(NANOS). A path pyarrow
+    cannot open (e.g. a remote URI) counts as not nanos; Spark's own read
+    then decides."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if not parts:
+            return False
+        path = os.path.join(path, parts[0])
+    try:
+        schema = pq.read_metadata(path).schema
+    except (OSError, ValueError):
+        return False
+    if "ts" not in schema.names:
+        return False
+    logical = schema.column(schema.names.index("ts")).logical_type
+    return json.loads(logical.to_json()).get("timeUnit") == "nanoseconds"
+
+
+def read_events(
+    spark: SparkSession,
+    path: str,
+    reader: Callable[[str], DataFrame] | None = None,
+) -> DataFrame:
+    """Open an events-shaped parquet file or directory — batch by default,
+    or through ``reader`` (a stream reader) — with ``ts`` as session-tz
+    TIMESTAMP. The one owner of the ``ts`` layouts events has landed in
+    across data regenerations:
+
+    * TIMESTAMP(NANOS), which Spark's reader rejects: read as long under
+      ``spark.sql.legacy.parquet.nanosAsLong`` (set only when the footer
+      says so — on other layouts the caller's session is left untouched)
+      and truncated to micros, as is a plain int64 nanos column;
+    * micros with ``isAdjustedToUTC=false``, which Spark 4 infers as
+      TIMESTAMP_NTZ: cast to session-tz TIMESTAMP (the session runs UTC,
+      so the cast is value-preserving and matches DuckDB's naive reading).
+    """
+    if _ts_is_nanos(path):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = (reader or spark.read.parquet)(path)
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one landed table. Plain parquet scan → Catalyst gets pushdown +
-    pruning for free; callers must select/filter declaratively.
-
-    ``events.ts`` has landed in two physical forms across driver data
-    regenerations: nanosecond timestamps (which Spark's vectorized reader
-    rejects — read as long, truncate to micros) and micro timestamps with
-    ``isAdjustedToUTC=false`` (which Spark 4 infers as TIMESTAMP_NTZ —
-    cast to session-tz TIMESTAMP; the session runs UTC, so the cast is
-    value-preserving and matches DuckDB's naive reading).
-    """
+    pruning for free; callers must select/filter declaratively. ``events``
+    goes through :func:`read_events` for its ``ts`` layouts."""
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return read_events(spark, table_path(sf_dir, name))
     return spark.read.parquet(table_path(sf_dir, name))
 
 

@@ -11,8 +11,6 @@ discipline in ``plans/exact.py``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -2383,10 +2381,8 @@ def a31_ab_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: a32's window-vs-crossing-bucket crossover: below this many lineitem
 #: rows (parquet footer count) the single per-group window wins (fewer
 #: jobs); above it the per-group sort tasks become the wall (145.3 s at
-#: sf10 vs 21.2 s bucketed, measured). Env-overridable for cluster tuning.
-_A32_WINDOW_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_A32_WINDOW_MAX_ROWS", str(2_000_000))
-)
+#: sf10 vs 21.2 s bucketed, measured).
+_A32_WINDOW_MAX_ROWS = 2_000_000
 
 
 @query(

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table, session_tmpdir
+from nba_data_pipeline_spark.io import read_table, session_tmpdir, table_stamp
 from nba_data_pipeline_spark.plans.registry import query
 
 # One written copy per (sf_dir) per session: the sink write is the thing
@@ -114,7 +114,7 @@ def snk3_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (sf_dir, orders.parquet mtime) → written workbook path (write once per
 #: process per data generation, like _SINK_CACHE; the mtime key guards
 #: against an in-process regeneration serving a stale workbook).
-_XLSX_CACHE: dict[tuple[str, float], str] = {}
+_XLSX_CACHE: dict[tuple[str, int], str] = {}
 
 
 @query(
@@ -140,7 +140,7 @@ def snk7_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its row cap refuses fact-sized frames)."""
     from nba_data_pipeline_spark.sources.xlsx_sink import read_xlsx, write_xlsx
 
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "orders.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "orders"))
     if cache_key not in _XLSX_CACHE:
         summary = (
             read_table(spark, sf_dir, "orders")
@@ -175,7 +175,7 @@ def snk7_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Partitioned-parquet landing per (sf_dir, source mtime) — same caching
 #: contract as the other sink fixtures.
-_PARQUET_CACHE: dict[tuple[str, float], str] = {}
+_PARQUET_CACHE: dict[tuple[str, int], str] = {}
 
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
@@ -183,7 +183,7 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     hive-partitioned parquet dataset, partitionBy(o_orderpriority) — the
     shared fact-side layout for snk8's static-pruning read-back and j15's
     dynamic-partition-pruning join."""
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "orders.parquet")))
+    key = (sf_dir, table_stamp(sf_dir, "orders"))
     if key not in _PARQUET_CACHE:
         path = os.path.join(session_tmpdir("snk8_"), "orders_by_priority")
         (

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table, session_tmpdir
+from nba_data_pipeline_spark.io import read_table, session_tmpdir, table_stamp
 from nba_data_pipeline_spark.plans.exact import dsum, sql_dsum
 from nba_data_pipeline_spark.plans.registry import query
 from nba_data_pipeline_spark.sources.csv_source import read_csv_clean
@@ -51,7 +51,7 @@ _HTML_PAGE_HEAD = (
 
 #: (sf_dir, supplier.parquet mtime) pairs already validated — the guard is a
 #: driver-side dim-table read, run once per process per data generation.
-_HTML_FIXTURE_OK: set[tuple[str, float]] = set()
+_HTML_FIXTURE_OK: set[tuple[str, int]] = set()
 
 
 def _guard_html_fixture(sf_dir: str) -> None:
@@ -60,7 +60,7 @@ def _guard_html_fixture(sf_dir: str) -> None:
     value would silently corrupt the round-trip and surface only as an
     opaque oracle hash mismatch (same posture as _land_csv's CSV-safety
     guard)."""
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "supplier.parquet")))
+    key = (sf_dir, table_stamp(sf_dir, "supplier"))
     if key in _HTML_FIXTURE_OK:
         return
     import pyarrow.parquet as pq
@@ -159,7 +159,7 @@ def src_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: (sf_dir, supplier.parquet mtime) → landed HTML dir (fixture synthesis,
 #: once per process per data generation — same cache posture as _land_csv).
-_HTML_BYID_CACHE: dict[tuple[str, float], str] = {}
+_HTML_BYID_CACHE: dict[tuple[str, int], str] = {}
 
 #: Table-id → friendly-name map, mirroring the reference's TABLE_NAME_MAP
 #: (get_basketball_stats_all_teams_Version6.py:55-82): extract only ids in
@@ -175,7 +175,7 @@ def _land_html_by_id(sf_dir: str) -> str:
     the distributed htmltable DataSource scan."""
     import html as _html
 
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "supplier.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "supplier"))
     if cache_key in _HTML_BYID_CACHE:
         return _HTML_BYID_CACHE[cache_key]
     import pyarrow.parquet as pq
@@ -290,7 +290,7 @@ def src_html_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: (sf_dir, nation.parquet mtime) → landed HTML dir (same cache posture as
 #: _land_csv: fixture synthesis once per process per data generation).
-_TABWALK_CACHE: dict[tuple[str, float], str] = {}
+_TABWALK_CACHE: dict[tuple[str, int], str] = {}
 
 _TABWALK_TABS = ("roster", "codes")
 
@@ -315,7 +315,7 @@ def _land_browser_tabwalk(sf_dir: str) -> str:
         walk_tabs,
     )
 
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "nation.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "nation"))
     if cache_key in _TABWALK_CACHE:
         return _TABWALK_CACHE[cache_key]
     tbl = pq.read_table(
@@ -455,7 +455,7 @@ def src_browser_tabwalk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: per data generation; the landing is fixture synthesis, not part of the
 #: measured read path — the mtime key keeps an in-process regeneration of
 #: the test data from serving stale landed files).
-_CSV_CACHE: dict[tuple[str, float], str] = {}
+_CSV_CACHE: dict[tuple[str, int], str] = {}
 
 _CSV_FILES = 4
 
@@ -465,7 +465,7 @@ def _land_csv(sf_dir: str) -> str:
     UTF-8 BOM on the header, padding blanks around header names and cells.
     Driver-side file synthesis (pyarrow, no Spark job) — bounded dim table,
     same posture as the streaming plans' file-landing fixture."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "customer.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "customer"))
     if cache_key in _CSV_CACHE:
         return _CSV_CACHE[cache_key]
     import pyarrow.parquet as pq
@@ -539,14 +539,14 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: (sf_dir, nation.parquet mtime) → landed per-region CSV dir.
-_HTTP_CACHE: dict[tuple[str, float], str] = {}
+_HTTP_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_region_csvs(sf_dir: str) -> str:
     """Land nation as one CSV file per region — the 'one URL per page'
     layout the reference fetches (lineup_scraper.py). Driver-side fixture
     synthesis over a dim table, same posture as _land_csv."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "nation.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "nation"))
     if cache_key in _HTTP_CACHE:
         return _HTTP_CACHE[cache_key]
     import pyarrow.parquet as pq
@@ -636,7 +636,7 @@ def src_http_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: (sf_dir, part.parquet mtime) → landed XML dir (land once per process per
 #: data generation, same cache posture as _land_csv).
-_XML_CACHE: dict[tuple[str, float], str] = {}
+_XML_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_xml(spark: SparkSession, sf_dir: str) -> str:
@@ -647,7 +647,7 @@ def _land_xml(spark: SparkSession, sf_dir: str) -> str:
     regeneration pads a text value with surrounding whitespace, which the
     XML reader's ignoreSurroundingSpaces default would silently strip (the
     advisor-mandated posture of _land_csv/_guard_html_fixture)."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "part.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "part"))
     if cache_key in _XML_CACHE:
         return _XML_CACHE[cache_key]
     p = read_table(spark, sf_dir, "part").select(
@@ -782,14 +782,14 @@ def src_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-ORC: columnar ORC round-trip with predicate pushdown
 # ---------------------------------------------------------------------------
 
-_ORC_CACHE: dict[tuple[str, float], str] = {}
+_ORC_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_orc(spark: SparkSession, sf_dir: str) -> str:
     """Land lineitem as ORC via the distributed writer — the other
     columnar lake format (Hive-ecosystem tables a Spark engine must read
     in place rather than convert)."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "lineitem.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "lineitem"))
     if cache_key in _ORC_CACHE:
         return _ORC_CACHE[cache_key]
     out = os.path.join(session_tmpdir("src_orc_"), "lineitem_orc")
@@ -844,7 +844,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-EVO: parquet schema evolution (mergeSchema read over drifted landings)
 # ---------------------------------------------------------------------------
 
-_EVO_CACHE: dict[tuple[str, float], str] = {}
+_EVO_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_evolved(spark: SparkSession, sf_dir: str) -> str:
@@ -853,7 +853,7 @@ def _land_evolved(spark: SparkSession, sf_dir: str) -> str:
     o_orderpriority — the additive schema drift every long-lived landed
     dataset accumulates. Split by orderkey parity so both generations are
     fact-sized and interleaved."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "orders.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "orders"))
     if cache_key in _EVO_CACHE:
         return _EVO_CACHE[cache_key]
     root = session_tmpdir("src_evo_")
@@ -920,7 +920,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-PERM: permissive CSV read with corrupt-record quarantine
 # ---------------------------------------------------------------------------
 
-_PERM_CACHE: dict[tuple[str, float], str] = {}
+_PERM_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_dirty_csv(sf_dir: str) -> str:
@@ -928,7 +928,7 @@ def _land_dirty_csv(sf_dir: str) -> str:
     (wrong arity / non-numeric key) — the malformed-feed reality the
     reference's scrapers hit on layout drift. Driver-side dim-table
     synthesis, same posture as _land_csv."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "supplier.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "supplier"))
     if cache_key in _PERM_CACHE:
         return _PERM_CACHE[cache_key]
     import pyarrow.parquet as pq
@@ -1035,7 +1035,7 @@ def src_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-BIN: binaryFile scan — the raw-media ingestion source
 # ---------------------------------------------------------------------------
 
-_BIN_CACHE: dict[tuple[str, float], str] = {}
+_BIN_CACHE: dict[tuple[str, int], str] = {}
 
 
 def _land_binary(spark: SparkSession, sf_dir: str) -> str:
@@ -1043,7 +1043,7 @@ def _land_binary(spark: SparkSession, sf_dir: str) -> str:
     landed EXECUTOR-SIDE via foreachPartition — the fixture stand-in for
     a crawl's raw image/audio payload directory. Cached per (sf_dir,
     mtime) like the other landings so repeated catalog runs reuse it."""
-    cache_key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
+    cache_key = (sf_dir, table_stamp(sf_dir, "documents"))
     if cache_key in _BIN_CACHE:
         return _BIN_CACHE[cache_key]
     root = session_tmpdir("src_bin_")

@@ -10,155 +10,81 @@ readStream path with watermarks), so DuckDB can verify them exactly.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import contextlib
-
 from nba_data_pipeline_spark.io import (
+    read_events,
     read_table,
     session_tmpdir,
-    streaming_checkpoint_dir,
+    table_path,
+    table_stamp,
 )
 from nba_data_pipeline_spark.plans.exact import sql_dsum
 from nba_data_pipeline_spark.plans.registry import query
+from nba_data_pipeline_spark.streaming.polling import (
+    drain,
+    read_file_stream,
+    run_available_now,
+)
 
 # Landed-file directories, reused across runs within a session (keyed by
-# (prefix, sf_dir, source mtime_ns)): re-landing identical files per
-# invocation only adds I/O, and the mtime component means a regenerated
+# (prefix, sf_dir, source table stamp)): re-landing identical files per
+# invocation only adds I/O, and the stamp component means a regenerated
 # source table at the same path re-lands instead of serving stale bytes.
 # Checkpoints are NOT reused — availableNow against a drained checkpoint
 # would consider the files already processed.
 _LANDING_CACHE: dict[tuple[str, str, int], str] = {}
 
-#: landing dir -> inferred stream schema (landings are immutable; see
-#: _stream_events)
-_LANDING_SCHEMA: dict[str, object] = {}
 
-
-def _source_mtime_ns(sf_dir: str, table: str) -> int:
-    """Change stamp of the source table for the landing-cache key. For a
-    single-file table this is its mtime. For a DIRECTORY table the
-    directory's own mtime only moves when entries are added/removed —
-    rewriting a part-file in place keeps it — so hash the contained
-    files' (name, size, mtime) listing instead; any in-place rewrite
-    changes the stamp and forces a re-land."""
-    import os as _os
-
-    from nba_data_pipeline_spark.io import table_path
-
-    p = table_path(sf_dir, table)
-    st = _os.stat(p)
-    if not _os.path.isdir(p):
-        return st.st_mtime_ns
-    h = 0
-    for name in sorted(_os.listdir(p)):
-        fs = _os.stat(_os.path.join(p, name))
-        h = hash((h, name, fs.st_size, fs.st_mtime_ns))
-    return h
-
-
-def _land(prefix: str, sf_dir: str, copies: int) -> str:
-    import shutil
-
-    from nba_data_pipeline_spark.io import table_path
-
-    key = (prefix, sf_dir, _source_mtime_ns(sf_dir, "events"))
+def _landing(
+    prefix: str, sf_dir: str, build: Callable[[str], None], table: str = "events"
+) -> str:
+    """The cached landing dir for ``prefix`` over ``table``: on a miss,
+    ``build`` fills a fresh session tmpdir."""
+    key = (prefix, sf_dir, table_stamp(sf_dir, table))
     if key not in _LANDING_CACHE:
         land_dir = session_tmpdir(f"{prefix}_landing_")
-        src = table_path(sf_dir, "events")
-        for i in range(copies):
-            shutil.copy(src, f"{land_dir}/arrival_{i + 1}.parquet")
+        build(land_dir)
         _LANDING_CACHE[key] = land_dir
     return _LANDING_CACHE[key]
 
 
+def _land(prefix: str, sf_dir: str, copies: int) -> str:
+    def build(land_dir: str) -> None:
+        for i in range(copies):
+            shutil.copy(table_path(sf_dir, "events"), f"{land_dir}/arrival_{i + 1}.parquet")
+
+    return _landing(prefix, sf_dir, build)
+
+
+def _write_arrival(df: DataFrame, dst: str, mtime: int) -> None:
+    """Write ``df`` as ONE flat parquet file at ``dst`` (the file stream
+    source does not recurse into subdirectories) with its mtime pinned, so
+    the file source's batch order is deterministic."""
+    stage = f"{dst}.stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+    shutil.rmtree(stage)
+    os.utime(dst, (mtime, mtime))
+
+
 def _stream_events(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    copies: int = 1,
-    land_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Land the events file(s) and open the landing dir as a micro-batch
-    stream with ``ts`` normalized to session-tz TIMESTAMP (same contract as
-    ``io.read_table``). The landed physical layout has shifted across driver
-    data regenerations (nanos-as-long vs micros-NTZ), so the stream schema
-    comes from a batch read of the landing dir instead of being hardcoded.
-    Callers with a custom landing (e.g. s3's two-phase arrival) pass
-    ``land_dir``; ``max_files_per_trigger`` forces one file per batch."""
-    if land_dir is None:
-        land_dir = _land(prefix, sf_dir, copies)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Landings are immutable once written (the cache key already folds in
-    # the SOURCE mtime), so the schema-inference batch read — one driver
-    # job per call, two for the dual-sided joins — caches per landing dir.
-    if land_dir not in _LANDING_SCHEMA:
-        _LANDING_SCHEMA[land_dir] = spark.read.parquet(land_dir).schema
-    reader = spark.readStream.format("parquet").schema(_LANDING_SCHEMA[land_dir])
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    sdf = reader.load(land_dir)
-    ts_type = dict(sdf.dtypes).get("ts")
-    if ts_type == "bigint":
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
-
-
-@contextlib.contextmanager
-def _small_state_shuffle(spark: SparkSession, n: int = 8):
-    """Stateful streaming cost here is per-partition state-store commit
-    overhead, not data volume: every micro-batch writes one delta + commit
-    file per shuffle partition. Dropping 32 -> 8 partitions for the
-    streaming aggregation halves wall-clock at sf0.1 (measured 2.5 s ->
-    1.35 s). At real scale the partition count must instead match state
-    volume — this scoped override models 'size state partitions to the
-    stream', which local[32] defaults don't. Callers should derive ``n``
-    from the landed stream's byte volume via :func:`_state_partitions`
-    rather than hardcoding a local-mode constant."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-#: target landed bytes per streaming state partition. Stateful operators
-#: pay a fixed per-partition per-micro-batch cost (one state-store delta +
-#: commit file each, ~10-30 ms here) that dwarfs the data work when the
-#: stream is small, so partitions are sized to the stream like any shuffle
-#: (guide §2.2's 100 MB-1 GB rule, scaled down one notch because state
-#: rows are keys, not payloads). Overridable for cluster deployments.
-_STATE_PARTITION_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_STATE_PARTITION_BYTES", 32 << 20)
-)
-
-
-def _state_partitions(land_dir: str, floor: int = 2, cap: int = 32) -> int:
-    """State partition count derived from the landed stream volume: enough
-    partitions that each holds ≤ _STATE_PARTITION_BYTES of landed input,
-    never fewer than ``floor`` (keeps the plan honestly distributed and the
-    state store exercised across partitions) and capped at ``cap`` (a
-    cluster overrides via SPARK_GRAFT_STATE_PARTITION_BYTES or session
-    shuffle-partition config). Replaces the fixed n=8/n=4 constants, which
-    were tuned to local[32] fixture scale: measured at sf0.1, the
-    stream-stream joins drop ~2 s (n=4 -> 2, two state stores each) and the
-    streaming aggregates ~0.5-1 s (n=8 -> 2) with byte-identical results —
-    partitioning never changes aggregate/join values."""
-    import math
-    import os as _os
-
-    try:
-        total = sum(
-            e.stat().st_size for e in _os.scandir(land_dir) if e.is_file()
-        )
-    except OSError:
-        total = 0
-    return max(floor, min(cap, math.ceil(total / _STATE_PARTITION_BYTES)))
+    spark: SparkSession, land_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Open a landing of events files as a micro-batch stream with ``ts``
+    normalized to session-tz TIMESTAMP (same contract as ``io.read_table``);
+    ``max_files_per_trigger`` forces one file per batch."""
+    return read_events(
+        spark,
+        land_dir,
+        lambda p: read_file_stream(spark, p, max_files_per_trigger=max_files_per_trigger),
+    )
 
 
 @query(
@@ -318,7 +244,7 @@ def s1_stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate bit-for-bit, which is exactly what the oracle checks."""
 
     land = _land("s1", sf_dir, 1)
-    sdf = _stream_events(spark, sf_dir, "s1", land_dir=land)
+    sdf = _stream_events(spark, land)
     agg = (
         sdf.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -327,16 +253,7 @@ def s1_stream_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
         )
     )
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s1_stream_counts_mem")
-            .outputMode("complete")
-            .option("checkpointLocation", streaming_checkpoint_dir("s1_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "s1_stream_counts_mem", land, output_mode="complete")
     return (
         spark.table("s1_stream_counts_mem")
         .select(
@@ -368,19 +285,10 @@ def s2_stream_arrival_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy, which is what the oracle checks."""
 
     land = _land("s2", sf_dir, 2)
-    sdf = _stream_events(spark, sf_dir, "s2", land_dir=land)
+    sdf = _stream_events(spark, land)
     deduped = sdf.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_events"))
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s2_dedupe_mem")
-            .outputMode("complete")
-            .option("checkpointLocation", streaming_checkpoint_dir("s2_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "s2_dedupe_mem", land, output_mode="complete")
     return spark.table("s2_dedupe_mem").orderBy("event_type")
 
 
@@ -409,7 +317,7 @@ def s7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Reuses s1's landing key: identical single-copy landing of events.
     land = _land("s1", sf_dir, 1)
-    sdf = _stream_events(spark, sf_dir, "s1", land_dir=land)
+    sdf = _stream_events(spark, land)
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
@@ -418,16 +326,7 @@ def s7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s7_stream_static_mem")
-            .outputMode("complete")
-            .option("checkpointLocation", streaming_checkpoint_dir("s7_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "s7_stream_static_mem", land, output_mode="complete")
     return spark.table("s7_stream_static_mem").orderBy("c_mktsegment")
 
 
@@ -436,16 +335,10 @@ def _land_two_phase(sf_dir: str) -> str:
     re-poll that returns only ``click``/``view`` rows (the reference's
     polling loop re-reads a page and usually gets a subset of tables).
     mtimes are pinned so the file source's batch order is deterministic."""
-    import os
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from nba_data_pipeline_spark.io import table_path
-
-    key = ("s3", sf_dir, _source_mtime_ns(sf_dir, "events"))
-    if key not in _LANDING_CACHE:
-        land_dir = session_tmpdir("s3_landing_")
+    def build(land_dir: str) -> None:
         tbl = pq.read_table(table_path(sf_dir, "events"))
         first = os.path.join(land_dir, "arrival_1.parquet")
         second = os.path.join(land_dir, "arrival_2.parquet")
@@ -457,8 +350,8 @@ def _land_two_phase(sf_dir: str) -> str:
         pq.write_table(tbl.filter(repoll), second)
         os.utime(first, (1_700_000_000, 1_700_000_000))
         os.utime(second, (1_700_000_100, 1_700_000_100))
-        _LANDING_CACHE[key] = land_dir
-    return _LANDING_CACHE[key]
+
+    return _landing("s3", sf_dir, build)
 
 
 @query(
@@ -490,13 +383,7 @@ def s3_stability_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nba_data_pipeline_spark.streaming.polling import stability_tracker
 
-    sdf = _stream_events(
-        spark,
-        sf_dir,
-        "s3",
-        land_dir=_land_two_phase(sf_dir),
-        max_files_per_trigger=1,
-    )
+    sdf = _stream_events(spark, _land_two_phase(sf_dir), max_files_per_trigger=1)
     tracked = stability_tracker(sdf, key_col="event_type")
     # Cost floor (re-profiled r4, the r3 bench flagged 1.44 s -> 2.79 s):
     # the regression is the SECOND deterministic arrival added in r3 —
@@ -506,16 +393,7 @@ def s3_stability_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (prev/stable are only observable across >=2 arrivals). Partition
     # count is NOT the lever at this key cardinality (n=2 measured within
     # noise of n=8; state is five longs), kept at 2 as the honest size.
-    with _small_state_shuffle(spark, n=2):
-        q = (
-            tracked.writeStream.format("memory")
-            .queryName("s3_stability_mem")
-            .outputMode("update")
-            .option("checkpointLocation", streaming_checkpoint_dir("s3_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(tracked, "s3_stability_mem", output_mode="update", state_partitions=2)
     return spark.table("s3_stability_mem").orderBy("key", "total")
 
 
@@ -544,8 +422,8 @@ def s8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user attribution counts are a batch aggregate over the drained
     pairs, and the oracle recomputes everything from the static table."""
     land = _land("s8", sf_dir, 1)
-    sdf_c = _stream_events(spark, sf_dir, "s8", land_dir=land)
-    sdf_p = _stream_events(spark, sf_dir, "s8", land_dir=land)
+    sdf_c = _stream_events(spark, land)
+    sdf_p = _stream_events(spark, land)
     clicks = (
         sdf_c.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
@@ -567,16 +445,7 @@ def s8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (each side keeps its own store), so the size-derived count matters
     # twice here: n=4 -> 2 measured ~1.5 s off the drain at sf0.1 (min of
     # 3) with identical results.
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName("s8_pairs_mem")
-            .outputMode("append")
-            .option("checkpointLocation", streaming_checkpoint_dir("s8_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(pairs, "s8_pairs_mem", land)
     drained = spark.table("s8_pairs_mem")
     return (
         drained.groupBy(F.col("c_user").alias("user_id"))
@@ -643,12 +512,8 @@ def s9_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions give at-least-once batches idempotent replay (re-running
     batch N overwrites version N derived from version N-1, instead of
     double-counting)."""
-    import os
-
     land = _land("s9", sf_dir, 3)
-    sdf = _stream_events(
-        spark, sf_dir, "s9", land_dir=land, max_files_per_trigger=1
-    )
+    sdf = _stream_events(spark, land, max_files_per_trigger=1)
     state_root = session_tmpdir("s9_state_")
     latest: dict[str, str] = {}
 
@@ -658,14 +523,7 @@ def s9_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         s9_batch_state(batch_df, prev).write.mode("overwrite").parquet(out)
         latest["path"] = out
 
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            sdf.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", streaming_checkpoint_dir("s9_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(sdf, "s9", land, foreach_batch=upsert)
     return (
         spark.read.parquet(latest["path"])
         .select(
@@ -681,44 +539,20 @@ def s9_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S10: replay dedupe across restamped arrivals (dropDuplicatesWithinWatermark)
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, events mtime) → landing dir with one original + one restamped copy
-_RESTAMP_CACHE: dict[tuple[str, float], str] = {}
-
-
-def _land_restamped(sf_dir: str) -> str:
+def _land_restamped(spark: SparkSession, sf_dir: str) -> str:
     """Land events twice: arrival_1 verbatim, arrival_2 with every ts
     shifted +30 minutes — the replayed-feed pathology where the upstream
     re-emits the same records with fresh event stamps (scraper re-runs,
-    at-least-once brokers). Driver-side pyarrow restamp of one file,
-    handling both physical ts layouts the driver has generated
-    (nanos-as-long / micros-NTZ)."""
-    import os as _os
-    import shutil
+    at-least-once brokers). Both arrivals are written from the
+    ``read_table`` frame, so the landing holds one ``ts`` layout."""
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    def build(land_dir: str) -> None:
+        e = read_table(spark, sf_dir, "events")
+        later = e.withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 MINUTES"))
+        _write_arrival(e, f"{land_dir}/arrival_1.parquet", 1_700_000_000)
+        _write_arrival(later, f"{land_dir}/arrival_2.parquet", 1_700_000_001)
 
-    from nba_data_pipeline_spark.io import table_path
-
-    src = table_path(sf_dir, "events")
-    key = (sf_dir, _os.path.getmtime(src))
-    if key in _RESTAMP_CACHE:
-        return _RESTAMP_CACHE[key]
-    land = session_tmpdir("s10_landing_")
-    shutil.copy(src, f"{land}/arrival_1.parquet")
-    t = pq.read_table(src)
-    i = t.schema.get_field_index("ts")
-    ts = t.column(i)
-    if pa.types.is_integer(ts.type):  # nanos-as-long layout
-        shifted = pc.add(ts, pa.scalar(30 * 60 * 10**9, type=ts.type))
-    else:
-        shifted = pc.add(ts, pa.scalar(30 * 60 * 10**6, type=pa.duration("us")))
-    pq.write_table(
-        t.set_column(i, t.schema.field(i), shifted), f"{land}/arrival_2.parquet"
-    )
-    _RESTAMP_CACHE[key] = land
-    return land
+    return _landing("s10", sf_dir, build)
 
 
 @query(
@@ -742,24 +576,15 @@ def s10_dedupe_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-state form a 100 TB at-least-once feed needs (state size ∝
     keys per watermark horizon, not keys ever seen). Per-type counts must
     equal the batch aggregate over the single copy — the oracle."""
-    land = _land_restamped(sf_dir)
-    sdf = _stream_events(spark, sf_dir, "s10", land_dir=land)
+    land = _land_restamped(spark, sf_dir)
+    sdf = _stream_events(spark, land)
     deduped = sdf.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_unique_events")
     )
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s10_dedupe_mem")
-            .outputMode("complete")
-            .option("checkpointLocation", streaming_checkpoint_dir("s10_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "s10_dedupe_mem", land, output_mode="complete")
     return spark.table("s10_dedupe_mem").orderBy("event_type")
 
 
@@ -870,37 +695,25 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
     The DuckDB oracle computes the same first-arrival-wins verdicts from
     the full corpus with the identical band construction — streaming
     incrementality must not change a single decision."""
-    import glob
-    import os as _os
-    import shutil
-
     from pyspark.sql import functions as _F
 
     from nba_data_pipeline_spark.operators.dedup import minhash_signature
     from nba_data_pipeline_spark.operators.textops import distinct_word_shingles_fast
 
     # --- land the two arrival files (even parity first; mtimes pin order).
-    # Landed once per (sf_dir, documents mtime) like _LANDING_CACHE's other
-    # entries: the two coalesce(1) writes were a fixed ~1 s on EVERY call
-    # for identical bytes, and the mtime key means a regenerated documents
-    # table re-lands. Checkpoints/store/output dirs stay fresh per call —
-    # only the input landing is reused.
-    key = ("s11", sf_dir, _source_mtime_ns(sf_dir, "documents"))
-    if key not in _LANDING_CACHE:
-        land = session_tmpdir("s11_landing_")
+    # Landed once per documents stamp: the two coalesce(1) writes were a
+    # fixed ~1 s on EVERY call for identical bytes. Checkpoints/store/output
+    # dirs stay fresh per call — only the input landing is reused.
+    def build(land_dir: str) -> None:
         docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
         for parity in (0, 1):
-            tmp = _os.path.join(land, f"_stage{parity}")
-            docs.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = glob.glob(_os.path.join(tmp, "part-*.parquet"))[0]
-            dst = _os.path.join(land, f"arrival_{parity}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp)
-            _os.utime(dst, (1_700_000_000 + parity, 1_700_000_000 + parity))
-        _LANDING_CACHE[key] = land
-    land = _LANDING_CACHE[key]
+            _write_arrival(
+                docs.filter(F.col("doc_id") % 2 == parity),
+                os.path.join(land_dir, f"arrival_{parity}.parquet"),
+                1_700_000_000 + parity,
+            )
+
+    land = _landing("s11", sf_dir, build, table="documents")
 
     store_dir = session_tmpdir("s11_store_")
     out_dir = session_tmpdir("s11_out_")
@@ -961,7 +774,7 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
         # only answers "is the store still empty?" (reading an empty dir
         # raises schema-inference errors) and touches no leaf files.
         has_store = any(
-            e.name.startswith("batch=") for e in _os.scandir(store_dir)
+            e.name.startswith("batch=") for e in os.scandir(store_dir)
         )
         store = (
             bdf.sparkSession.read.parquet(store_dir) if has_store else None
@@ -969,36 +782,19 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
         decisions = s11_batch_decisions(bdf, bands, store, arrival)
         # idempotent on replay: each batch owns its subdirectory
         decisions.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, f"batch={arrival}")
+            os.path.join(out_dir, f"batch={arrival}")
         )
         bands.write.mode("overwrite").parquet(
-            _os.path.join(store_dir, f"batch={arrival}")
+            os.path.join(store_dir, f"batch={arrival}")
         )
         bands.unpersist()
 
-    if land not in _LANDING_SCHEMA:
-        _LANDING_SCHEMA[land] = spark.read.parquet(land).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(_LANDING_SCHEMA[land])
-        .option("maxFilesPerTrigger", "1")
-        .load(land)
-    )
     # foreachBatch's inner jobs (band build, store join, the two parquet
-    # writes) run during awaitTermination, so the scoped small-shuffle
-    # override reaches them too: a KB-scale batch gains nothing from the
-    # session's 32-way exchanges, and the store join's task-scheduling
-    # floor dominated this entry's wall-clock. At real scale the batch
-    # volume sizes this knob instead (same note as _small_state_shuffle) —
-    # which is what _state_partitions computes from the landed bytes.
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", streaming_checkpoint_dir("s11_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # writes) run inside the drain's small-shuffle scope: a KB-scale batch
+    # gains nothing from the session's 32-way exchanges, and the store
+    # join's task-scheduling floor dominated this entry's wall-clock.
+    stream = read_file_stream(spark, land, max_files_per_trigger=1)
+    drain(stream, "s11", land, foreach_batch=handle)
     # Single-path read here too; partition discovery adds a `batch` column
     # that the select drops.
     return (
@@ -1012,9 +808,6 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
 # S12: custom Python streaming source (polldir) — poll-loop as a DataSource
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, events mtime) → landed JSONL dir for the polldir source.
-_POLL_CACHE: dict[tuple[str, float], str] = {}
-
 _POLL_FILES = 3
 
 
@@ -1022,45 +815,30 @@ def _land_jsonl(sf_dir: str) -> str:
     """Land events as N JSON-lines files (striped by event_id) — the pages
     a polling scraper would drop, one file per poll. Driver-side via
     pyarrow; floats serialize via repr so they round-trip exactly."""
-    import json as _json
-    import os as _os
+    import json
 
     import pyarrow.parquet as pq
 
-    from nba_data_pipeline_spark.io import table_path
+    def build(land: str) -> None:
+        names = ("event_id", "user_id", "event_type", "value")
+        tbl = pq.read_table(table_path(sf_dir, "events"), columns=list(names))
+        cols = [tbl.column(c).to_pylist() for c in names]
+        # Land-then-rename (the polldir source's landing contract): write
+        # every file under a temp suffix the reader's *.jsonl filter
+        # ignores, then atomically rename — a poll can never observe a
+        # half-written file.
+        tmp = [os.path.join(land, f"poll_{i}.jsonl.tmp") for i in range(_POLL_FILES)]
+        handles = [open(t, "w") for t in tmp]
+        try:
+            for row in zip(*cols):
+                handles[row[0] % _POLL_FILES].write(json.dumps(dict(zip(names, row))) + "\n")
+        finally:
+            for h in handles:
+                h.close()
+        for t in tmp:
+            os.rename(t, t.removesuffix(".tmp"))
 
-    src = table_path(sf_dir, "events")
-    key = (sf_dir, _os.path.getmtime(src))
-    if key in _POLL_CACHE:
-        return _POLL_CACHE[key]
-    land = session_tmpdir("s12_polldir_")
-    tbl = pq.read_table(src, columns=["event_id", "user_id", "event_type", "value"])
-    cols = [tbl.column(c).to_pylist() for c in ("event_id", "user_id", "event_type", "value")]
-    # Land-then-rename (the polldir source's landing contract): write every
-    # file under a temp suffix the reader's *.jsonl filter ignores, then
-    # atomically rename — a poll can never observe a half-written file.
-    handles = [
-        open(_os.path.join(land, f"poll_{i}.jsonl.tmp"), "w")
-        for i in range(_POLL_FILES)
-    ]
-    try:
-        for eid, uid, et, val in zip(*cols):
-            handles[eid % _POLL_FILES].write(
-                _json.dumps(
-                    {"event_id": eid, "user_id": uid, "event_type": et, "value": val}
-                )
-                + "\n"
-            )
-    finally:
-        for h in handles:
-            h.close()
-    for i in range(_POLL_FILES):
-        _os.rename(
-            _os.path.join(land, f"poll_{i}.jsonl.tmp"),
-            _os.path.join(land, f"poll_{i}.jsonl"),
-        )
-    _POLL_CACHE[key] = land
-    return land
+    return _landing("s12", sf_dir, build)
 
 
 @query(
@@ -1100,16 +878,7 @@ def s12_custom_pystream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event_id").cast("bigint").alias("sum_event_id"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    with _small_state_shuffle(spark, n=_state_partitions(land)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s12_poll_mem")
-            .outputMode("complete")
-            .option("checkpointLocation", streaming_checkpoint_dir("s12_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "s12_poll_mem", land, output_mode="complete")
     return spark.table("s12_poll_mem").orderBy("event_type")
 
 
@@ -1123,52 +892,26 @@ def _land_with_sentinel(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     the land-a-heartbeat pattern for closing event-time windows on a
     bounded replay of an unbounded stream (r11: was two sentinels + a
     maxFilesPerTrigger=1 batch-per-file drain — same rows out, double the
-    fixed per-batch machinery)."""
-    import os as _os
-    import shutil
+    fixed per-batch machinery). Both files are written from the
+    ``read_table`` frame, so the landing holds one ``ts`` layout; batch
+    order is pinned by explicit mtimes, not wall-clock sleeps."""
 
-    from nba_data_pipeline_spark.io import table_path
+    def build(land_dir: str) -> None:
+        e = read_table(spark, sf_dir, "events")
+        _write_arrival(e, f"{land_dir}/arrival_1.parquet", 1_700_000_000)
+        # ONE sentinel at +60 days (see s13's drain for the watermark math
+        # that makes one enough).
+        sent = e.agg(F.max("ts").alias("ts")).select(
+            F.lit(-3).cast("long").alias("event_id"),
+            (F.col("ts") + F.expr("INTERVAL 60 DAYS")).alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit("wm_sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit("{}").alias("props"),
+        )
+        _write_arrival(sent, f"{land_dir}/sentinel_2.parquet", 1_700_000_002)
 
-    key = (prefix, sf_dir, _source_mtime_ns(sf_dir, "events"))
-    if key not in _LANDING_CACHE:
-        land_dir = session_tmpdir(f"{prefix}_landing_")
-        src = table_path(sf_dir, "events")
-        shutil.copy(src, f"{land_dir}/arrival_1.parquet")
-        # batch order is pinned by EXPLICIT mtimes (the s11 pattern), not
-        # wall-clock sleeps — the old sleep(1.05) per sentinel put a fixed
-        # 2.1 s on every first drain of this landing
-        _os.utime(f"{land_dir}/arrival_1.parquet", (1_700_000_000, 1_700_000_000))
-        base = spark.read.parquet(f"{land_dir}/arrival_1.parquet")
-        ts_type = dict(base.dtypes).get("ts")
-        # ONE sentinel at +60 days (r11: was two, at +30/+60, with
-        # maxFilesPerTrigger=1 — four micro-batches where two suffice; see
-        # s13's drain for the watermark math that makes one enough).
-        for i, days in ((2, 60),):
-            sent = base.agg(F.max("ts").alias("ts")).select(
-                F.lit(-1 - i).cast("long").alias("event_id"),
-                (
-                    F.col("ts") + F.expr(f"INTERVAL {days} DAYS")
-                    if ts_type != "bigint"
-                    else (F.col("ts") + F.lit(days * 86400 * 10**9)).cast("long")
-                ).alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit("wm_sentinel").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit("{}").alias("props"),
-            )
-            # The file stream source does not recurse into subdirectories,
-            # so the sentinel must land as a FLAT file: write to a scratch
-            # dir, then move the part file up as sentinel_<i>.parquet.
-            import glob as _glob
-
-            scratch = session_tmpdir(f"{prefix}_sent{i}_")
-            sent.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = _glob.glob(f"{scratch}/part-*.parquet")[0]
-            dst = f"{land_dir}/sentinel_{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        _LANDING_CACHE[key] = land_dir
-    return _LANDING_CACHE[key]
+    return _landing(prefix, sf_dir, build)
 
 
 @query(
@@ -1216,8 +959,8 @@ def s13_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly. Was: two sentinels + maxFilesPerTrigger=1 = four batches
     for the same result set (measured 4.4 s -> see OPTIMIZATION_r11.md)."""
     land = _land_with_sentinel(spark, sf_dir, "s13")
-    sdf_c = _stream_events(spark, sf_dir, "s13", land_dir=land)
-    sdf_p = _stream_events(spark, sf_dir, "s13", land_dir=land)
+    sdf_c = _stream_events(spark, land)
+    sdf_p = _stream_events(spark, land)
     # The sentinel rows must flow THROUGH the watermark operator to
     # advance event time (a type filter excluding them would be pushed
     # below the watermark node by the optimizer, and the watermark
@@ -1247,18 +990,7 @@ def s13_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     try:
-        with _small_state_shuffle(spark, n=_state_partitions(land)):
-            q = (
-                pairs.writeStream.format("memory")
-                .queryName("s13_pairs_mem")
-                .outputMode("append")
-                .option(
-                    "checkpointLocation", streaming_checkpoint_dir("s13_ckpt_")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(pairs, "s13_pairs_mem", land)
     finally:
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndmb
@@ -1304,31 +1036,17 @@ def snk9_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     log is one compact JSON per batch — the standard lake landing pattern;
     downstream compaction is lo2's job. The final aggregate is a
     map-side-combined groupBy over the re-read."""
-    import glob as _glob
-    import shutil as _shutil
-
     land = _land("snk9", sf_dir, 2)
-    sdf = _stream_events(
-        spark, sf_dir, "snk9", land_dir=land, max_files_per_trigger=1
-    )
+    sdf = _stream_events(spark, land, max_files_per_trigger=1)
     out_dir = session_tmpdir("snk9_out_")
-    ck = session_tmpdir("snk9_ck_")
     proj = sdf.filter(F.col("event_type").isin("purchase", "click")).select(
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
-    q = (
-        proj.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(proj, out_dir, session_tmpdir("snk9_ck_"))
     # Plant an orphan data file the transaction log knows nothing about —
     # the metadata-aware scan must not count it.
-    committed = _glob.glob(f"{out_dir}/part-*.parquet")
-    _shutil.copy(committed[0], f"{out_dir}/part-99999-orphan.parquet")
+    committed = glob.glob(f"{out_dir}/part-*.parquet")
+    shutil.copy(committed[0], f"{out_dir}/part-99999-orphan.parquet")
     back = spark.read.parquet(out_dir)
     return (
         back.groupBy("event_type")

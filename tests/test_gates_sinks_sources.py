@@ -233,32 +233,6 @@ def test_html_corpus_cascade_distributed(spark):
     assert {r.url for r in out} == {"u1"} and len(out) == 2
 
 
-def test_config_resolution_chain(tmp_path):
-    from nba_data_pipeline_spark.config import resolve_config, session_kwargs
-
-    cfg_file = tmp_path / "config.json"
-    cfg_file.write_text('{"sf_dir": "/from/file", "cpus": 2}')
-    # file beats default; env beats file; cli beats env
-    cfg = resolve_config(config_path=str(cfg_file), env={})
-    assert cfg["sf_dir"] == "/from/file" and cfg["cpus"] == 2
-    cfg = resolve_config(
-        config_path=str(cfg_file), env={"SPARK_GRAFT_CPUS": "8"}
-    )
-    assert cfg["cpus"] == 8
-    cfg = resolve_config(
-        cli={"cpus": 16},
-        config_path=str(cfg_file),
-        env={"SPARK_GRAFT_CPUS": "8"},
-    )
-    assert cfg["cpus"] == 16 and cfg["sink_mode"] == "combined"
-    assert session_kwargs(cfg) == {"cpus": 16}
-    # unknown keys are rejected, not silently defaulted
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown config keys"):
-        resolve_config(cli={"cpu": 4}, env={})
-
-
 def test_xlsx_workbook_sink(spark, tmp_path):
     """SNK7: combined workbook, one sheet per table; verify the container by
     re-parsing the zip's XML (no Excel lib in the sandbox)."""

@@ -12,6 +12,7 @@ from nba_data_pipeline_spark.streaming.polling import (
     read_file_stream,
     run_available_now,
 )
+from tests.conftest import SF_DIR
 
 SCHEMA = T.StructType(
     [
@@ -114,18 +115,22 @@ def test_stability_tracker_stateful(spark, dirs):
 
 
 def test_landing_cache_relands_when_source_changes(tmp_path):
-    """_LANDING_CACHE keys on the source table's mtime: regenerating the
+    """_LANDING_CACHE keys on the source table's stamp: regenerating the
     events table at the same path within a session must produce a FRESH
-    landing (a stale landing would silently replay old bytes)."""
+    landing (a stale landing would silently replay old bytes) — both for a
+    single-file table and for a directory table whose part file is
+    rewritten in place, which leaves the directory's own mtime alone."""
     import os
     import shutil
 
-    from nba_data_pipeline_spark.plans.streaming_plans import _land
+    import pyarrow.parquet as pq
+
+    from nba_data_pipeline_spark.plans.streaming_plans import _land, _land_jsonl
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     src = os.path.join(sf_dir, "events.parquet")
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src)
+    shutil.copy(f"{SF_DIR}/events.parquet", src)
 
     first = _land("tcache", sf_dir, copies=1)
     # identical source -> cached landing dir
@@ -135,3 +140,70 @@ def test_landing_cache_relands_when_source_changes(tmp_path):
     os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     second = _land("tcache", sf_dir, copies=1)
     assert second != first
+
+    # directory-form events table (s12's JSONL landing reads it)
+    dir_sf = str(tmp_path / "sf_dir")
+    table_dir = os.path.join(dir_sf, "events.parquet")
+    part = os.path.join(table_dir, "part-0.parquet")
+    os.makedirs(table_dir)
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    pq.write_table(events, part)
+    first = _land_jsonl(dir_sf)
+    assert _land_jsonl(dir_sf) == first
+    dir_st = os.stat(table_dir)
+    pq.write_table(events.slice(0, 10), part)
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    os.utime(table_dir, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    second = _land_jsonl(dir_sf)
+    assert second != first
+    landed = 0
+    for name in os.listdir(second):
+        with open(os.path.join(second, name)) as fh:
+            landed += sum(1 for _ in fh)
+    assert landed == 10
+
+
+NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_micros_events_leave_nanos_conf_unset(spark):
+    """Reading micros-layout events — batch or as a drained stream — does
+    not set the nanos conf on the caller's session."""
+    from nba_data_pipeline_spark.io import read_table
+    from nba_data_pipeline_spark.plans.streaming_plans import s1_stream_ingest_counts
+
+    spark.conf.unset(NANOS_CONF)
+    read_table(spark, SF_DIR, "events")
+    assert len(s1_stream_ingest_counts(spark, SF_DIR).collect()) > 1
+    assert spark.conf.get(NANOS_CONF, None) is None
+
+
+def test_nanos_events_match_micros(spark, tmp_path):
+    """A TIMESTAMP(NANOS) copy of events yields the same rows as the micros
+    original, batch (s6) and through a sentinel landing and stream (s13),
+    in a session that has not read nanos events before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nba_data_pipeline_spark.plans.streaming_plans import (
+        s6_tumbling_windows,
+        s13_stream_outer_join,
+    )
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = events.schema.get_field_index("ts")
+    nanos = events.set_column(i, "ts", events.column(i).cast(pa.timestamp("ns")))
+    nanos_dir = tmp_path / "sf_nanos"
+    nanos_dir.mkdir()
+    pq.write_table(nanos, nanos_dir / "events.parquet", version="2.6")
+    assert pq.read_schema(nanos_dir / "events.parquet").field("ts").type == pa.timestamp("ns")
+    try:
+        for fn in (s13_stream_outer_join, s6_tumbling_windows):
+            want = fn(spark, SF_DIR).collect()
+            spark.conf.unset(NANOS_CONF)
+            got = fn(spark, str(nanos_dir)).collect()
+            assert len(want) > 1
+            assert got == want
+    finally:
+        spark.conf.unset(NANOS_CONF)
