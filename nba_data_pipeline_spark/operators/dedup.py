@@ -16,10 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from nba_data_pipeline_spark.operators.textops import (
-    distinct_word_shingles_fast,
-    ws_tokens,
-)
+from nba_data_pipeline_spark.operators.textops import distinct_word_shingles_fast
 
 
 def keep_first(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -100,19 +97,19 @@ def hashed_shingle_sets(
     join-backs into the intersection groupBy — one exchange instead of
     three plan legs (r11). Collision budget as documented on
     :func:`jaccard_pairs`."""
-    # single_eval: size() + explode() over the same array would otherwise
-    # plan as two ArrowEvalPython nodes (the shingling UDF cloned across
-    # the Generate boundary — measured 2x the shingle cost, guide §4.4).
-    arr = distinct_word_shingles_fast(
-        F.col(text_col), k, single_eval=True
-    ).alias("__sh_arr")
+    # explode_outer + a null filter, not explode: below a plain explode of
+    # the array attribute Catalyst infers ``size(arr) > 0`` and pushes it
+    # through the projection, which shingles every doc twice. The outer
+    # form's one null row per shingle-less doc is dropped instead.
+    arr = distinct_word_shingles_fast(F.col(text_col), k).alias("__sh_arr")
     return (
         docs.select(F.col(id_col), arr)
         .select(
             F.col(id_col),
             F.size("__sh_arr").cast("int").alias("sz"),
-            F.explode("__sh_arr").alias("shingle"),
+            F.explode_outer("__sh_arr").alias("shingle"),
         )
+        .filter(F.col("shingle").isNotNull())
         .select(F.col(id_col), "sz", F.xxhash64("shingle").alias("sh_h"))
     )
 

@@ -1,8 +1,9 @@
 """Text-analysis operators for large-scale training-data pipelines:
 language-ID (n-gram/stopword heuristic), quality scoring, token counting,
-document fingerprinting. All built from JVM-side expressions (split /
-filter / regexp) — no Python in the hot path — so they stream through
-whole-stage codegen at 100 TB.
+document fingerprinting, shingling and winnowing. All are JVM-side
+Catalyst expressions (split / regexp / higher-order array functions) that
+the optimizer can see, except ``predict_lang_fast``, an Arrow
+``pandas_udf``.
 
 These extend the reference's text handling (line parsing, keyword
 predicates — run_scraper.py:97-101, nba_props_scraper.py:633-645) to the
@@ -117,84 +118,47 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(F.array_join(F.array_sort(F.array_distinct(ws_tokens(text))), " "))
 
 
-def distinct_word_shingles_fast(
-    text: Column, k: int = 3, single_eval: bool = False
-) -> Column:
-    """Arrow-vectorized distinct k-word shingles.
-
-    The pure-expression form (``word_shingles``) is interpreted per row
-    (higher-order transform + element_at) and measures ~1.8 ms/doc; this
-    Pandas UDF computes the identical strings ~100× faster, which matters
-    when shingling feeds every dedup operator. Whitespace ``str.split()``
-    matches the engine's trim+regex-split tokenization on whitespace-
-    separated text, so downstream hashes are unchanged.
-
-    ``single_eval=True`` marks the UDF non-deterministic (it is in fact
-    pure, so results are unchanged) to stop the optimizer CLONING the call
-    when two consumers reference it across a Project/Generate boundary —
-    e.g. ``size(arr)`` beside ``explode(arr)`` in
-    ``dedup.hashed_shingle_sets`` planned as TWO ArrowEvalPython nodes,
-    doubling the shingling cost (guide §4.4). Off by default: the flag
-    also blocks legitimate reorderings (filter pushdown past the UDF), so
-    callers opt in only where the duplication is real."""
-
-    @F.pandas_udf("array<string>")
-    def _shingles(s: pd.Series) -> pd.Series:
-        def f(t: str):
-            toks = (t or "").split()
-            if len(toks) < k:
-                return []
-            seen = dict.fromkeys(
-                " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
-            )
-            return list(seen)
-
-        return s.map(f)
-
-    fn = _shingles.asNondeterministic() if single_eval else _shingles
-    return fn(text)
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles as strings; [] when the doc has fewer than k tokens.
-    Built with sequence+transform (JVM-side), no explode needed."""
-    toks = ws_tokens(text)
-    n = F.size(toks)
-    # guard: sequence(1, 0) would be DESCENDING [1,0], not empty
-    idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-        F.array().cast("array<int>")
+    """k-word shingles as strings in document order; [] when the doc has
+    fewer than k tokens or is null. The tokens are exactly ``ws_tokens``'s
+    (trim, split on ``\\s+``, so a leading tab or a trailing newline is an
+    empty token, and U+00A0 is not whitespace). Every whitespace run
+    becomes one space, then one regex pass captures, at each token start,
+    the zero-width lookahead over the next k space-separated tokens."""
+    one_space = F.regexp_replace(F.trim(text), WS_TOKEN_PATTERN, " ")
+    gram = f"(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{k - 1}}}))"
+    return F.coalesce(
+        F.regexp_extract_all(one_space, F.lit(gram), 1),
+        F.array().cast("array<string>"),
     )
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
-    )
+
+
+def distinct_word_shingles_fast(text: Column, k: int = 3) -> Column:
+    """Distinct k-word shingles, first occurrence kept, in document order
+    — the shingle set every near-dup operator consumes."""
+    return F.array_distinct(word_shingles(text, k))
 
 
 def winnow_minima_fast(text: Column, k: int = 3, w: int = 4) -> Column:
-    """Arrow-vectorized winnowing fingerprints: distinct sliding-window
-    (width ``w``) minima over the md5 hashes of the document's k-gram
-    sequence. The pure-expression form (higher-order ``transform`` with a
-    per-element md5 + a per-doc ROWS window) is interpreted per element and
-    measured ~25 s on the sf0.1 corpus; this computes identical strings in
-    one Python pass (~1 s), the same trade ``distinct_word_shingles_fast``
-    makes for shingling. Output order is the document's window order —
-    callers that need set semantics get it for free (duplicates removed,
-    first occurrence kept)."""
-    import hashlib
+    """Winnowing fingerprints: the distinct sliding-window (width ``w``)
+    minima over the md5 hashes of the document's k-grams, in window order
+    (duplicates removed, first occurrence kept); [] when the doc has fewer
+    than ``w`` k-grams."""
 
-    @F.pandas_udf("array<string>")
-    def _winnow(s: pd.Series) -> pd.Series:
-        def f(t: str):
-            toks = (t or "").split()
-            n = len(toks) - (k - 1)
-            if n < w:
-                return []
-            hashes = [
-                hashlib.md5(" ".join(toks[i : i + k]).encode()).hexdigest()
-                for i in range(n)
-            ]
-            return list(dict.fromkeys(min(hashes[i : i + w]) for i in range(n - w + 1)))
+    def minima(h: Column) -> Column:
+        n_win = F.size(h) - (w - 1)
+        starts = F.when(n_win >= 1, F.sequence(F.lit(1), n_win)).otherwise(
+            F.array().cast("array<int>")
+        )
+        return F.array_distinct(
+            F.transform(
+                starts,
+                lambda i: F.least(*[F.element_at(h, i + j) for j in range(w)]),
+            )
+        )
 
-        return s.map(f)
-
-    return _winnow(text)
+    hashes = F.transform(word_shingles(text, k), lambda g: F.md5(g))
+    # An array expression named inside a lambda is re-evaluated for every
+    # element; a lambda variable is not. Passing the hashes in as the one
+    # element of a one-element array binds them once per row.
+    return F.element_at(F.transform(F.array(hashes), minima), 1)

@@ -517,13 +517,12 @@ def ta_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries shift by a token.
 
     Spark-first shape: the per-document rolling pass (k-gram md5 sequence →
-    window minima → distinct) runs in one Arrow-batched pandas UDF
-    (``winnow_minima_fast`` — the expression-land transform+ROWS-window
-    form measured 25 s at sf0.1, the vectorized pass ~1 s, the same trade
-    shingling makes); fingerprint document-frequency is one aggregate on
-    the 32-hex key + an equi-join back. Everything is linear and
-    shuffle-bounded by the fingerprint relation, which winnowing already
-    shrank ~2.5x."""
+    window minima → distinct) is one Catalyst expression
+    (``winnow_minima_fast``: one regex pass for the k-grams, the md5 array
+    bound once per row, the least hash of each window); fingerprint
+    document-frequency is one window count on the 32-hex key. Everything
+    is linear and shuffle-bounded by the fingerprint relation, which
+    winnowing already shrank ~2.5x."""
     from nba_data_pipeline_spark.operators.textops import winnow_minima_fast
 
     d = (
@@ -539,12 +538,11 @@ def ta_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(winnow_minima_fast(F.col("text"), _WIN_K, _WIN_W)).alias("wmin"),
     )
     # df via COUNT OVER (PARTITION BY wmin), not aggregate + join-back
-    # (r11, guide §4.4/§2.4): fp is an Arrow-UDF lane, and referencing it
-    # from both the freq aggregate and the join ran the winnowing UDF
-    # TWICE (plan: 2 ArrowEvalPython subtrees; 1.74 -> 1.06 s at sf0.1).
-    # The window shuffles fp by wmin once — the same bytes the join form
-    # pays at scale once freq outgrows the broadcast threshold, minus the
-    # second UDF pass. If fingerprint df ever turns heavy-tailed
+    # (r11, guide §4.4/§2.4): referencing fp from both the freq aggregate
+    # and the join runs the winnowing pass twice, once per subtree. The
+    # window shuffles fp by wmin once — the same bytes the join form pays
+    # at scale once freq outgrows the broadcast threshold, minus the
+    # second winnowing pass. If fingerprint df ever turns heavy-tailed
     # (corpus-wide boilerplate), split the hot keys with a salted
     # two-phase count before the window (guide §2.5).
     wdf = fp.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("wmin")))

@@ -119,9 +119,9 @@ def d5_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The (doc, shingle) relation is persisted: it feeds the per-doc size
     aggregate and both sides of the candidate join, and without the cache
-    the Python shingling UDF re-runs per consumer (measured ~2× on the
-    query; at 100 TB this is a staging parquet write instead)."""
-    # single-row-group table: shuffle raw text once so the Python
+    the shingling pass re-runs per consumer (at 100 TB this is a staging
+    parquet write instead)."""
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (
@@ -223,8 +223,8 @@ def d5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         read_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        # repartition ahead of the shingling UDF so the corpus pass isn't
-        # pinned to the scan's single row-group task
+        # repartition ahead of the shingling pass so it isn't pinned to
+        # the scan's single row-group task
         .repartition(spark.sparkContext.defaultParallelism)
     )
     from nba_data_pipeline_spark.io import table_row_count
@@ -232,7 +232,7 @@ def d5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Size-adaptive shingle materialization (footer probe, the d5_cc /
     # geo1 discipline): on a SMALL corpus the (doc_id, sh_arr) cache is an
-    # optimization — signatures and both verify sides share one Python
+    # optimization — signatures and both verify sides share one
     # shingling pass. Past HASHED_SHINGLE_PERSIST_DOCS the cache itself is
     # the hazard (sf300: ~70 GB of string arrays was this entry's
     # single-box wall), so the corpus pass STREAMS into the signature
@@ -349,7 +349,7 @@ def d5_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5c: SimHash — 16-bit majority signature over distinct-token md5
     nibbles; identical signatures = near-dup buckets. One explode + one
     aggregate; bit arithmetic stays JVM-side."""
-    # single-row-group table: shuffle raw text once so the Python
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (
@@ -547,7 +547,7 @@ def d5_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log P) contraction rounds — see ``operators/graph.py``. DuckDB
     verifies via a recursive CTE reaching the same fixpoint.
     """
-    # single-row-group table: shuffle raw text once so the Python
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (
@@ -586,7 +586,7 @@ def d5_cc_clusters_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fixpoint the recursive-CTE oracle computes (the 1-partition
     variant exercises only the single-pass fast path). Past the bound
     (sf30 and up) the general contraction loop runs instead."""
-    # single-row-group table: shuffle raw text once so the Python
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (
@@ -651,7 +651,7 @@ def d8_crossdoc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise work at all, which is what makes this the cheapest cross-doc
     dup signal at 100 TB. Shingles are distinct per doc, so per-doc
     frequency equals document frequency."""
-    # single-row-group table: shuffle raw text once so the Python
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (
@@ -663,7 +663,7 @@ def d8_crossdoc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hash the shingle once: the frequency aggregate and the join back both
     # shuffle 8-byte keys instead of ~20-byte strings (same discipline as
     # jaccard_pairs; collisions are ~1e-8 at corpus scale). Persisted —
-    # two consumers, one Python shingling pass.
+    # two consumers, one shingling pass.
     hashed = sh.select("doc_id", F.xxhash64("shingle").alias("sh_h")).persist()
     freq = hashed.groupBy("sh_h").agg(F.count(F.lit(1)).alias("df"))
     per_doc = (
@@ -710,7 +710,7 @@ def ta_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training shingle stream — one scan of the corpus, no shuffle on the big
     side beyond the per-doc count. This is the canonical asymmetric-join
     decontamination used by production training pipelines."""
-    # single-row-group table: shuffle raw text once so the Python
+    # single-row-group table: shuffle raw text once so the
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)
     d = (

@@ -719,20 +719,19 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
     out_dir = session_tmpdir("s11_out_")
 
     # One arrival file = ONE scan partition, which would serialize the
-    # shingling/minhash Arrow UDF on a single core; spread the batch
-    # before the UDF, sized to the batch (~half the corpus here), capped
-    # at the session's cores. At sf0.1 this halved the entry (7.6 -> 3.4 s
-    # with the scoped small-shuffle drain); at deep decades the cap wins
-    # and the spread equals defaultParallelism.
+    # shingling/minhash pass on a single core; spread the batch before
+    # it, sized to the batch (~half the corpus here), capped at the
+    # session's cores. At deep decades the cap wins and the spread equals
+    # defaultParallelism.
     from nba_data_pipeline_spark.io import table_row_count
 
     n_docs = table_row_count(sf_dir, "documents") or 0
-    udf_spread = min(
+    spread = min(
         spark.sparkContext.defaultParallelism, max(2, n_docs // 500)
     )
 
     def bands_of(bdf):
-        sig = bdf.repartition(udf_spread).select(
+        sig = bdf.repartition(spread).select(
             "doc_id",
             distinct_word_shingles_fast(_F.col("text")).alias("sh_arr"),
         ).select("doc_id", *minhash_signature(_F.col("sh_arr"), 12))

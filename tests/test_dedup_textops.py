@@ -40,6 +40,105 @@ def test_word_shingles_edges(docs):
     assert out[4] == []
 
 
+# Texts where whitespace handling decides the k-grams: Spark and the DuckDB
+# oracle both trim spaces only and split on ASCII ``\s+``, so a leading tab
+# or trailing newline is an empty token and U+00A0 (NBSP) is not a break.
+TOKENIZER_EDGE_TEXTS = [
+    "double  spaced words here now",
+    "inner\ttab splits these words apart",
+    "\tfoo bar baz",
+    "foo bar baz\n",
+    "one two\r\nthree four five",
+    "  leading and trailing spaces  ",
+    "two words",
+    "exactly three words",
+    "a b c a b c a b c d e f g h",
+    "",
+    "p\u00a0q r s",
+    "café déjà vu über straße naïve à la carte",
+    "alpha  beta\tgamma delta\n epsilon zeta eta theta iota kappa lambda",
+]
+
+
+def test_shingles_and_winnow_match_oracle_tokenization(spark):
+    """distinct_word_shingles_fast and winnow_minima_fast against DuckDB
+    running the oracle expressions: the shingle set of ``_SQL_SHINGLES``
+    (its grams in document order, first occurrence kept) and the
+    ta_winnow_fingerprint CTEs' fingerprints in window order."""
+    import duckdb
+
+    from nba_data_pipeline_spark.operators.textops import (
+        distinct_word_shingles_fast,
+        winnow_minima_fast,
+    )
+    from nba_data_pipeline_spark.plans import dedup as dedup_plans
+    from nba_data_pipeline_spark.plans.registry import load_all
+
+    rows = list(enumerate(TOKENIZER_EDGE_TEXTS))
+    got = {
+        r.doc_id: (r.sh, r.fp)
+        for r in spark.createDataFrame(rows, "doc_id long, text string")
+        .select(
+            "doc_id",
+            distinct_word_shingles_fast(F.col("text")).alias("sh"),
+            winnow_minima_fast(F.col("text")).alias("fp"),
+        )
+        .collect()
+    }
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    shingles = dedup_plans._SQL_SHINGLES
+    assert shingles.startswith("list_distinct(") and shingles.endswith(")")
+    grams = shingles[len("list_distinct(") : -1]
+    sh_oracle = {
+        d: (set(sh), list(dict.fromkeys(g)))
+        for d, sh, g in con.execute(
+            f"WITH t AS (SELECT doc_id, {dedup_plans._TOKS} AS toks FROM documents) "
+            f"SELECT doc_id, {shingles}, {grams} FROM t"
+        ).fetchall()
+    }
+    # the oracle's own CTEs up to its fingerprint set ``fp``
+    winnow_sql = load_all()["ta_winnow_fingerprint"].oracle
+    ctes = winnow_sql[: winnow_sql.index("freq AS (")].rstrip().rstrip(",")
+    fp_oracle: dict[int, list[str]] = {}
+    for d, wmin in con.execute(
+        f"{ctes} SELECT doc_id, wmin FROM win JOIN fp USING (doc_id, wmin) "
+        "GROUP BY doc_id, wmin ORDER BY doc_id, MIN(pos)"
+    ).fetchall():
+        fp_oracle.setdefault(d, []).append(wmin)
+
+    for d, text in rows:
+        sh, fp = got[d]
+        want_set, want_order = sh_oracle[d]
+        assert set(sh) == want_set and sh == want_order, (text, sh, want_order)
+        assert fp == fp_oracle.get(d, []), (text, fp, fp_oracle.get(d))
+    # the edge set is not vacuous: fingerprints exist, and the tab/NBSP
+    # cases keep the oracle's tokens
+    assert sum(len(fp) for _, fp in got.values()) >= 5
+    shingles_of = {text: got[d][0] for d, text in rows}
+    assert shingles_of["\tfoo bar baz"] == [" foo bar", "foo bar baz"]
+    assert shingles_of["p\u00a0q r s"] == ["p\u00a0q r s"]
+
+
+def test_shingles_and_winnow_of_null_text_are_empty(spark):
+    from nba_data_pipeline_spark.operators.textops import (
+        distinct_word_shingles_fast,
+        winnow_minima_fast,
+    )
+
+    row = (
+        spark.createDataFrame([(1, None)], "doc_id long, text string")
+        .select(
+            distinct_word_shingles_fast(F.col("text")).alias("sh"),
+            winnow_minima_fast(F.col("text")).alias("fp"),
+        )
+        .first()
+    )
+    assert row.sh == [] and row.fp == []
+
+
 def test_jaccard_pairs(docs):
     sh = shingle_sets(docs)
     pairs = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(sh).collect()}
@@ -53,14 +152,16 @@ def test_jaccard_pairs_hashed_sz_fast_path(docs):
     map-side, and jaccard_pairs folds |A|/|B| into the intersection groupBy
     (no size aggregate, no join-backs). The fast path must agree with the
     string-relation fallback exactly, and the plan must evaluate the
-    shingling UDF once (the size+explode duplication regression)."""
+    shingling once (the size+explode duplication regression)."""
     from nba_data_pipeline_spark.operators.dedup import hashed_shingle_sets
 
     sh_h = hashed_shingle_sets(docs)
     assert set(sh_h.columns) == {"doc_id", "sz", "sh_h"}
-    # one ArrowEvalPython: size() beside explode() must not clone the UDF
+    # shingling is a Catalyst expression, and size() beside explode() must
+    # not clone it (e.g. into an inferred size(...) > 0 filter)
     plan = sh_h._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("ArrowEvalPython") == 0
+    assert plan.count("regexp_extract_all") == 1
     # sz == the doc's distinct shingle count on every exploded row
     sizes = {
         (r.doc_id, r.sz) for r in sh_h.select("doc_id", "sz").distinct().collect()

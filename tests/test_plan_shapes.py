@@ -71,6 +71,58 @@ def test_deferred_entry_plan_fingerprint(spark, name):
         assert "ArrowEvalPython" not in phys and "BatchEvalPython" not in phys
 
 
+# Every catalog entry whose plan reaches operators/textops' shingling or
+# winnowing, directly or through dedup.shingle_sets / hashed_shingle_sets
+# / cc_edges. Both are Catalyst expressions, so none of these plans holds
+# a Python evaluation node. (d5_cc_clusters, d5_cc_clusters_multipart and
+# d11_survivor_selection keep their mapInPandas DSU closure, a MapInPandas
+# node this guard does not look for.)
+SHINGLE_ENTRIES = [
+    "d5_ngram_jaccard_topk",
+    "d5_minhash_lsh_pairs",
+    "d5_cc_clusters",
+    "d5_cc_clusters_multipart",
+    "d8_crossdoc_ngram_coverage",
+    "d9_prefix_filter_join",
+    "d10_lsh_recall_eval",
+    "d11_survivor_selection",
+    "ta_decontaminate",
+    "ta_contamination_overlap",
+    "ta_winnow_fingerprint",
+    "s11_stream_incremental_minhash",
+]
+
+
+def _sql_execution_plans(spark, after_id: int) -> list[tuple[int, str]]:
+    """(id, physical plan) of every SQL execution with id > ``after_id``,
+    read from the session's SQL status store once the listener bus has
+    delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after_id:
+            out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
+@pytest.mark.parametrize("name", SHINGLE_ENTRIES)
+def test_shingle_entries_have_no_python_eval(spark, name):
+    """The returned plan, and every plan executed while building the entry
+    (s11's foreachBatch drain, any eager action), is free of
+    ArrowEvalPython and BatchEvalPython."""
+    last = max((i for i, _ in _sql_execution_plans(spark, -1)), default=-1)
+    df = load_all()[name].fn(spark, SF_DIR)
+    plans = [plan_string(df).split("== Physical Plan ==")[-1]]
+    plans += [p for _, p in _sql_execution_plans(spark, last)]
+    if name.startswith("s11_"):
+        # the drain's batch plans are where its shingling runs
+        assert any("regexp_extract_all" in p for p in plans[1:])
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p[:2000]
+
+
 def test_broadcast_hints_survive_to_plan(spark):
     """j1's dim lookup must compile to a broadcast join, not a shuffle
     join — the 100 TB claim in its docstring depends on it."""
