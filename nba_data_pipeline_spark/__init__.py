@@ -8,6 +8,7 @@ the reference's polling-loop ingestion shapes.
 
 Layout:
     session     — SparkSession factory tuned for local[N] and cluster scale
+    pydaemon    — the Python worker daemon that factory configures
     io          — table readers/writers (parquet seam, partitioned sinks)
     functions/  — scalar expression library (regex extraction, odds math, text)
     operators/  — DataFrame->DataFrame operators (normalize, coerce, dedup,

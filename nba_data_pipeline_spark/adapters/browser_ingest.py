@@ -21,9 +21,12 @@ Design rules:
   caller-constructed drivers and import nothing at module import time (the
   libraries are not in this container — the wrappers are exercised against
   duck-typed fakes, the logic against :class:`ScriptedSession`).
-* **Deterministic time.** Every wait takes injectable ``clock``/``sleep``
-  so tests (and fixture synthesis inside catalog entries) run instantly
-  and reproducibly.
+* **Deterministic time.** Every wait takes injectable ``clock``/``sleep``.
+  :class:`ScriptedSession` owns a virtual clock (``session.clock`` /
+  ``session.sleep``): its pages change only per ``page_source()`` call, so
+  a replay — tests, the CLI, fixture synthesis inside catalog entries —
+  passes those and runs instantly and reproducibly. Real drivers keep the
+  ``time.monotonic`` / ``time.sleep`` defaults.
 * **Atomic landing.** Pages land via write-to-temp + ``os.replace`` so the
   engine's polling source (streaming/polling.py, SRC8) can never observe a
   torn file — the same contract the reference's download waiter enforces
@@ -291,7 +294,12 @@ class ScriptedSession:
     must survive the growth and return only once stable. ``clicks`` maps
     a selector to the url it navigates to (a tab activation); unknown
     selectors return False like a missing element. ``redirects`` maps a
-    requested url to the one the browser ends up on (login bounce)."""
+    requested url to the one the browser ends up on (login bounce).
+
+    The session keeps its own time: ``sleep(s)`` advances it and ``clock()``
+    reads it. Pass both to the waits (``walk_tabs(..., clock=s.clock,
+    sleep=s.sleep)``) — the pages only change per ``page_source()`` call,
+    so a wall-clock wait would poll the same snapshots, only slower."""
 
     def __init__(
         self,
@@ -307,6 +315,13 @@ class ScriptedSession:
         self._clicks = dict(clicks or {})
         self._redirects = dict(redirects or {})
         self._url = ""
+        self._t = 0.0
+
+    def clock(self) -> float:
+        return self._t
+
+    def sleep(self, s: float) -> None:
+        self._t += s
 
     def get(self, url: str) -> None:
         self._url = self._redirects.get(url, url)

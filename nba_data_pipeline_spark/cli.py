@@ -9,8 +9,9 @@ gate → reference-layout sink):
   surface (Basketball Reference Scraper unified_nba_scraper.py:356-416) with
   Cleaning_Glass_Multi.py:716-739's warn-and-skip team-list validation (F6).
   Walks each selected team's stat tabs through the browser-session adapter
-  (real Selenium/Playwright when installed, the deterministic
-  ScriptedSession replay otherwise), lands the rendered pages atomically,
+  (always the deterministic ScriptedSession replay, waiting on its virtual
+  clock; a real Selenium/Playwright session would plug into the same
+  protocol), lands the rendered pages atomically,
   scans them with the ``htmltable`` DataSource, normalizes (N1-N4/X17),
   gates on full (team × page) presence (S5: never trust partial data,
   DEFENSEVSPOSTION.PY:41-43), and writes the literal
@@ -200,8 +201,8 @@ def _team_page_html(team: str, page: str, season: str) -> str:
 
 
 def _make_session(teams: list[str], season: str):
-    """Real browser when a driver library is installed, ScriptedSession
-    replay otherwise — the adapter protocol makes the walk identical."""
+    """The ScriptedSession replay of every selected team's tabs. The CLI
+    always replays; a real driver session would walk the same protocol."""
     from nba_data_pipeline_spark.adapters.browser_ingest import ScriptedSession
 
     pages = {
@@ -243,6 +244,7 @@ def cmd_scrape_teams(args: argparse.Namespace) -> int:
                 for tab, html in walk_tabs(
                     session, base, TEAM_PAGES,
                     required_headers=["PLAYER"], on_missing="raise",
+                    clock=session.clock, sleep=session.sleep,
                 )
             ),
             land_dir,
@@ -554,7 +556,8 @@ class DownloadingScriptedSession:
     """ScriptedSession + the one real-browser behavior it lacks: a download
     click lands a file in the download directory (atomically, like the
     browser's .crdownload → rename). Real drivers do this natively; the
-    double does it so ``wait_for_download`` and the CSV lane run unchanged."""
+    double does it so ``wait_for_download`` and the CSV lane run unchanged.
+    Time is the inner session's virtual clock."""
 
     def __init__(self, inner, downloads: dict[str, tuple[str, str]], download_dir: str):
         self._inner = inner
@@ -569,6 +572,12 @@ class DownloadingScriptedSession:
 
     def page_source(self) -> str:
         return self._inner.page_source()
+
+    def clock(self) -> float:
+        return self._inner.clock()
+
+    def sleep(self, s: float) -> None:
+        self._inner.sleep(s)
 
     def click(self, selector: str) -> bool:
         if selector == "#export-csv":
@@ -651,10 +660,16 @@ def cmd_export(args: argparse.Namespace) -> int:
                   "files": [], "error": None}
         try:
             session.get(url)
-            wait_for_table_ready(session, ["TEAM"], timeout_s=5.0)
+            wait_for_table_ready(
+                session, ["TEAM"], timeout_s=5.0,
+                clock=session.clock, sleep=session.sleep,
+            )
             clear_dir(download_dir)
             if session.click("#export-csv"):
-                downloaded = wait_for_download(download_dir, timeout_s=10.0)
+                downloaded = wait_for_download(
+                    download_dir, timeout_s=10.0,
+                    clock=session.clock, sleep=session.sleep,
+                )
                 if downloaded is None:
                     result["error"] = "Download did not complete"
                 else:
@@ -1170,9 +1185,8 @@ def cmd_dvp(args: argparse.Namespace) -> int:
                 session,
                 base_url,
                 max_retries=int(args.max_retries),
-                timeout_s=2.0,
-                poll_s=0.02,
-                stable_s=0.05,
+                clock=session.clock,
+                sleep=session.sleep,
             )
         ),
         land_dir,

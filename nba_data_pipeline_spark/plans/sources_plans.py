@@ -357,14 +357,6 @@ def _land_browser_tabwalk(sf_dir: str) -> str:
             )
             pages[f"{base}#tab-{tab}"] = [page(part, 1), page(full, len(cells))]
 
-    t = [0.0]
-
-    def clock() -> float:
-        return t[0]
-
-    def sleep(s: float) -> None:
-        t[0] += s
-
     out_dir = session_tmpdir("src_browser_tabwalk_")
     session = ScriptedSession(pages)
     for rk, base in bases.items():
@@ -377,8 +369,8 @@ def _land_browser_tabwalk(sf_dir: str) -> str:
                     _TABWALK_TABS,
                     required_headers=["KEY"],
                     on_missing="raise",
-                    clock=clock,
-                    sleep=sleep,
+                    clock=session.clock,
+                    sleep=session.sleep,
                 )
             ),
             out_dir,

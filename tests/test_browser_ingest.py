@@ -62,6 +62,42 @@ def test_wait_returns_only_after_row_count_stabilizes():
     assert fc.t >= 0.6
 
 
+class _CountingSession(ScriptedSession):
+    def __init__(self, pages):
+        super().__init__(pages)
+        self.reads = 0
+
+    def page_source(self):
+        self.reads += 1
+        return super().page_source()
+
+
+def test_walk_tabs_on_the_session_clock_polls_like_a_fake_clock():
+    # a progressive page per tab (partial, then full) readies on the
+    # session's own clock after exactly the polls an injected clock takes
+    base = "https://example.test/team"
+    pages = {
+        f"{base}#tab-a": [_table(1), _table(4)],
+        f"{base}#tab-b": [_table(2), _table(3), _table(6)],
+    }
+    s = _CountingSession(pages)
+    got = list(walk_tabs(
+        s, base, ["a", "b"], required_headers=["TEAM"],
+        on_missing="raise", clock=s.clock, sleep=s.sleep,
+    ))
+    ref = _CountingSession(pages)
+    fc = _FakeClock()
+    want = list(walk_tabs(
+        ref, base, ["a", "b"], required_headers=["TEAM"],
+        on_missing="raise", clock=fc.clock, sleep=fc.sleep,
+    ))
+    assert got == want
+    assert [t for t, _ in got] == ["a", "b"]
+    assert got[1][1] == _table(6)
+    assert s.reads == ref.reads
+    assert s.clock() == pytest.approx(fc.t) and s.clock() >= 2 * 0.6
+
+
 def test_wait_ignores_comment_embedded_and_wrong_header_tables():
     url = "https://example.test/stats"
     page = (

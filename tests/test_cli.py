@@ -8,9 +8,16 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pytest
 
+from nba_data_pipeline_spark.adapters.browser_ingest import (
+    wait_for_download,
+    wait_for_table_ready,
+    walk_tabs,
+)
 from nba_data_pipeline_spark.cli import (
     TEAM_PAGES,
     TEAMS,
@@ -18,6 +25,7 @@ from nba_data_pipeline_spark.cli import (
     parse_teams,
     resolve_team_list,
 )
+from nba_data_pipeline_spark.operators.dvp import dvp_matrix_walk
 from nba_data_pipeline_spark.sinks_ref import sanitize_component
 
 
@@ -88,6 +96,24 @@ def test_sanitize_component_matches_column_fn(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.fixture
+def no_wall_sleep(monkeypatch):
+    """Fail any wall-clock sleep on the main thread: the replayed browser
+    sessions wait on their own virtual clock. Patches ``time.sleep`` and
+    the ``sleep`` defaults the browser waits bound at import. Background
+    threads (py4j's connection reaper) keep the real sleep."""
+    real_sleep = time.sleep
+
+    def boom(s):
+        if threading.current_thread() is not threading.main_thread():
+            return real_sleep(s)
+        raise AssertionError(f"replay slept {s}s on the wall clock")
+
+    monkeypatch.setattr(time, "sleep", boom)
+    for fn in (walk_tabs, wait_for_table_ready, wait_for_download, dvp_matrix_walk):
+        monkeypatch.setitem(fn.__kwdefaults__, "sleep", boom)
+
+
 def _relpaths(root: str) -> set[str]:
     out = set()
     for r, _d, files in os.walk(root):
@@ -96,7 +122,7 @@ def _relpaths(root: str) -> set[str]:
     return out
 
 
-def test_scrape_teams_golden_tree(spark, tmp_path):
+def test_scrape_teams_golden_tree(spark, tmp_path, no_wall_sleep):
     out = str(tmp_path / "teams")
     rc = main(
         [
@@ -201,7 +227,7 @@ def test_resolve_credentials_chain(tmp_path):
             resolve_credentials(None, None, None, env=bad)
 
 
-def test_export_golden_run(spark, tmp_path, monkeypatch):
+def test_export_golden_run(spark, tmp_path, monkeypatch, no_wall_sleep):
     monkeypatch.setenv("CTG_EMAIL", "u@example.com")
     monkeypatch.setenv("CTG_PASSWORD", "pw")
     out = str(tmp_path / "export")
@@ -388,7 +414,7 @@ def test_bref_header_sep(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_dvp_golden_tree(spark, tmp_path):
+def test_dvp_golden_tree(spark, tmp_path, no_wall_sleep):
     out = str(tmp_path / "dvp")
     rc = main([
         "dvp", "--output", out,
