@@ -31,14 +31,10 @@ def sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def main() -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    spark = get_spark("bench", cpus=cpus)
-    specs = load_all()
-
-    # Warm the JVM/codegen path once so per-query numbers measure the plan,
-    # not first-touch initialization.
-    spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Warm the JVM/codegen path once so per-query numbers measure the plan,
+    not first-touch initialization."""
+    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     # Warm the Python-worker pool too: the first pandas_udf execution forks
     # one worker per core (~3-4 s measured at 32 cores) — a fixed
     # per-process cost that would otherwise land on whichever UDF query
@@ -52,6 +48,13 @@ def main() -> int:
     spark.range(cpus * 4).repartition(cpus).select(_warm("id")).write.format(
         "noop"
     ).mode("overwrite").save()
+
+
+def main() -> int:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
+    spark = get_spark("bench", cpus=cpus)
+    specs = load_all()
+    warm_up(spark, SF_DIR, cpus)
 
     # Two timed executions per query, report the min: the first run pays
     # one-off costs that aren't the plan (parquet footer reads, codegen

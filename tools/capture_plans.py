@@ -1,11 +1,13 @@
 """Capture .explain("formatted") output for named catalog entries.
 
 Usage:
-    python tools/capture_plans.py --out plans/r11 --suffix _after name ...
+    [SPARK_GRAFT_SF_DIR=dir] python tools/capture_plans.py --out DIR [--suffix S] name ...
 
-Writes ``<out>/<name><suffix>.txt`` per entry. Run from any checkout (the
-repo root is derived from this file's location), so a ``git worktree`` of a
-pre-change commit produces the matching ``_before`` files.
+Writes ``<out>/<name><suffix>.txt`` per entry, planned at sf0.1 by default on
+as many cores as bench.py uses (``SPARK_GRAFT_CPUS``, else the host's count),
+so exchanges have the partition counts that bench.py times. Run from any
+checkout (the repo root is derived from this file's location), so a checkout
+of a pre-change commit produces the matching ``_before`` files.
 """
 
 from __future__ import annotations
@@ -24,13 +26,12 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="")
-    ap.add_argument("--cpus", type=int, default=8)
     args = ap.parse_args()
 
     from nba_data_pipeline_spark.plans.registry import load_all
     from nba_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("capture_plans", cpus=args.cpus)
+    spark = get_spark("capture_plans")
     specs = load_all()
     os.makedirs(args.out, exist_ok=True)
     for name in args.names:
