@@ -163,6 +163,32 @@ def table_stamp(sf_dir: str, name: str) -> int:
     return h
 
 
+_LANDINGS: dict[tuple[str, str, tuple[int, ...]], str] = {}
+
+
+def landing(
+    prefix: str, sf_dir: str, tables: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """The package's one landing cache: the fixture directory ``prefix``
+    derives from ``tables`` of ``sf_dir``. On a miss ``build`` fills a
+    fresh :func:`session_tmpdir`, and the entry is stored only once it
+    returns, so a failed build is retried rather than cached.
+
+    The key is ``(prefix, sf_dir, table_stamp of each of tables)``, so
+    ``tables`` must name every table ``build`` reads: a table rewritten
+    in place then re-lands instead of serving a stale tree. Reuse exists
+    because re-landing identical bytes on every call would only
+    re-measure the filesystem. Stream checkpoints are never landed here:
+    an availableNow query against a drained checkpoint treats the files
+    as already processed."""
+    key = (prefix, sf_dir, tuple(table_stamp(sf_dir, t) for t in tables))
+    if key not in _LANDINGS:
+        land_dir = session_tmpdir(f"{prefix}_landing_")
+        build(land_dir)
+        _LANDINGS[key] = land_dir
+    return _LANDINGS[key]
+
+
 def _ts_is_nanos(path: str) -> bool:
     """Whether the parquet footer of ``path`` (a file, or the first part
     file of a directory) types ``ts`` as TIMESTAMP(NANOS). A path pyarrow

@@ -1,11 +1,21 @@
-"""Sink-mode catalog query (SURVEY §2.10 SNK3): the reference saves the
-same insight set either as one combined file or as one file per team
-(nba_insights_scraper.py:518-575). Engine form: the same aggregate lands
-via BOTH layouts — a single JSON dataset and a partitionBy(key) JSON
-dataset — and the query re-reads each from disk and emits a per-(mode,
-key) manifest. The oracle recomputes the manifest straight from the
-source table, so the round-trip proves both sink modes persist identical
-content (serialization, partition-column extraction, nothing dropped).
+"""Sink round-trip catalog queries (SURVEY §2.10): each entry lands data
+through a sink, reads the landed files back and re-aggregates, and its
+oracle recomputes the result straight from the source tables — so a hash
+match proves the sink persisted everything exactly.
+
+* SNK3 — combined vs by-key JSON sink modes
+  (nba_insights_scraper.py:518-575);
+* SNK7 — the Excel workbook sink;
+* SNK8 — a hive-partitioned parquet sink with a partition-pruned read,
+  whose landing dq6 reconciles against its source and j15 joins;
+* SNK10 — dynamic partition overwrite;
+* SNK11-SNK14 — the reference's literal JSON trees (sinks_ref.py): the
+  per-team page tree, the insights tree, the bref stats document and the
+  DvP matrix document.
+
+Every fixture lands through :func:`io.landing`, keyed by the stamps of
+the tables it reads; SNK10 writes a fresh tree per call because the
+overwrite is the thing under test.
 """
 
 from __future__ import annotations
@@ -15,13 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table, session_tmpdir, table_stamp
+from nba_data_pipeline_spark.io import landing, read_table, session_tmpdir
 from nba_data_pipeline_spark.plans.registry import query
-
-# One written copy per (sf_dir) per session: the sink write is the thing
-# under test, but re-landing identical bytes on every invocation would
-# only re-measure the filesystem.
-_SINK_CACHE: dict[str, str] = {}
 
 _PAYLOAD_SCHEMA = (
     "o_orderstatus string, o_orderpriority string, n_orders long, total_cents long"
@@ -39,8 +44,7 @@ def _payload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _written_root(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _SINK_CACHE:
-        root = session_tmpdir("snk3_")
+    def build(root: str) -> None:
         payload = _payload(spark, sf_dir)
         # Combined mode: one logical dataset, one directory. By-key mode:
         # partitionBy writes <root>/by_key/o_orderstatus=<k>/part-*.json —
@@ -59,8 +63,8 @@ def _written_root(spark: SparkSession, sf_dir: str) -> str:
         payload.repartition("o_orderstatus").write.mode("overwrite").partitionBy(
             "o_orderstatus"
         ).json(os.path.join(root, "by_key"))
-        _SINK_CACHE[sf_dir] = root
-    return _SINK_CACHE[sf_dir]
+
+    return landing("snk3", sf_dir, ("orders",), build)
 
 
 @query(
@@ -111,12 +115,6 @@ def snk3_sink_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SNK7: Excel workbook sink round-trip
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, orders.parquet mtime) → written workbook path (write once per
-#: process per data generation, like _SINK_CACHE; the mtime key guards
-#: against an in-process regeneration serving a stale workbook).
-_XLSX_CACHE: dict[tuple[str, int], str] = {}
-
-
 @query(
     "snk7_xlsx_roundtrip",
     oracle="""
@@ -140,8 +138,7 @@ def snk7_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its row cap refuses fact-sized frames)."""
     from nba_data_pipeline_spark.sources.xlsx_sink import read_xlsx, write_xlsx
 
-    cache_key = (sf_dir, table_stamp(sf_dir, "orders"))
-    if cache_key not in _XLSX_CACHE:
+    def build(out_dir: str) -> None:
         summary = (
             read_table(spark, sf_dir, "orders")
             .groupBy("o_orderstatus")
@@ -153,11 +150,10 @@ def snk7_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        path = os.path.join(session_tmpdir("snk7_"), "orders.xlsx")
-        write_xlsx({"order_summary": summary}, path)
-        _XLSX_CACHE[cache_key] = path
+        write_xlsx({"order_summary": summary}, os.path.join(out_dir, "orders.xlsx"))
 
-    header, rows = read_xlsx(_XLSX_CACHE[cache_key])["order_summary"]
+    out_dir = landing("snk7", sf_dir, ("orders",), build)
+    header, rows = read_xlsx(os.path.join(out_dir, "orders.xlsx"))["order_summary"]
     # Explicit all-string DDL schema: xlsx cells come back as strings, and
     # relying on inference would turn an empty sheet or an all-None column
     # into an opaque 'cannot infer schema' error instead of a clear cast
@@ -173,28 +169,23 @@ def snk7_xlsx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderstatus")
 
 
-#: Partitioned-parquet landing per (sf_dir, source mtime) — same caching
-#: contract as the other sink fixtures.
-_PARQUET_CACHE: dict[tuple[str, int], str] = {}
-
-
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Land (once per process per data generation) orders as a
     hive-partitioned parquet dataset, partitionBy(o_orderpriority) — the
     shared fact-side layout for snk8's static-pruning read-back and j15's
     dynamic-partition-pruning join."""
-    key = (sf_dir, table_stamp(sf_dir, "orders"))
-    if key not in _PARQUET_CACHE:
-        path = os.path.join(session_tmpdir("snk8_"), "orders_by_priority")
+
+    def build(out_dir: str) -> None:
         (
             read_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderpriority")
             .write.partitionBy("o_orderpriority")
             .mode("overwrite")
-            .parquet(path)
+            .parquet(os.path.join(out_dir, "orders_by_priority"))
         )
-        _PARQUET_CACHE[key] = path
-    return _PARQUET_CACHE[key]
+
+    out_dir = landing("snk8", sf_dir, ("orders",), build)
+    return os.path.join(out_dir, "orders_by_priority")
 
 
 @query(
@@ -365,8 +356,6 @@ def snk10_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
     untouched partitions cost zero I/O; the proof aggregate is one
     partition-pruned re-read. This composes with snk8 (partition-pruned
     reads) and lo2 (compaction) as the partition-lifecycle trio."""
-    from nba_data_pipeline_spark.io import session_tmpdir
-
     out_dir = session_tmpdir("snk10_")
     base = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -402,45 +391,39 @@ def snk10_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
 # SNK11: reference-LITERAL layout tree round-trip (sinks_ref.py)
 # ---------------------------------------------------------------------------
 
-#: sf_dir → landed tree root (land once per process; the write is under
-#: test, re-landing identical bytes would only re-measure the filesystem).
-_SNK11_CACHE: dict[str, str] = {}
-
 _SNK11_DATE = "2026-01-01"
 
 
 def _snk11_tree(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SNK11_CACHE:
-        return _SNK11_CACHE[sf_dir]
     from nba_data_pipeline_spark.sinks_ref import write_team_page_tree
 
-    n = read_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    payload = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select(
-            F.col("n_name").alias("team"),
-            F.element_at(
-                F.array(F.lit("lineups"), F.lit("onoff"), F.lit("players")),
-                (F.col("n_nationkey") % 3).cast("int") + 1,
-            ).alias("page"),
-            F.col("c_custkey").alias("row_idx"),
-            (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+    def build(root: str) -> None:
+        n = read_table(spark, sf_dir, "nation").select(
+            "n_nationkey", "n_name"
         )
-    )
-    root = session_tmpdir("snk11_")
-    write_team_page_tree(
-        payload, root, date_str=_SNK11_DATE,
-        team_col="team", page_col="page", order_col="row_idx",
-    )
-    _SNK11_CACHE[sf_dir] = root
-    return root
+        c = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_nationkey", "c_acctbal"
+        )
+        payload = (
+            c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+            .select(
+                F.col("n_name").alias("team"),
+                F.element_at(
+                    F.array(F.lit("lineups"), F.lit("onoff"), F.lit("players")),
+                    (F.col("n_nationkey") % 3).cast("int") + 1,
+                ).alias("page"),
+                F.col("c_custkey").alias("row_idx"),
+                (F.col("c_acctbal").cast("decimal(18,2)") * 100)
+                .cast("bigint")
+                .alias("cents"),
+            )
+        )
+        write_team_page_tree(
+            payload, root, date_str=_SNK11_DATE,
+            team_col="team", page_col="page", order_col="row_idx",
+        )
+
+    return landing("snk11", sf_dir, ("nation", "customer"), build)
 
 
 @query(
@@ -505,36 +488,31 @@ def snk11_reference_layout_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SNK12: per-team insights tree round-trip (sinks_ref.write_insights_tree)
 # ---------------------------------------------------------------------------
 
-_SNK12_CACHE: dict[str, str] = {}
-
-
 def _snk12_tree(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SNK12_CACHE:
-        return _SNK12_CACHE[sf_dir]
     from nba_data_pipeline_spark.sinks_ref import write_insights_tree
 
-    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    payload = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select(
-            F.col("n_name").alias("player_team"),
-            F.col("c_custkey").alias("row_idx"),
-            (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+    def build(root: str) -> None:
+        n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+        c = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_nationkey", "c_acctbal"
         )
-    )
-    root = session_tmpdir("snk12_")
-    write_insights_tree(
-        payload, root, save_mode="by_team",
-        metadata={"scrape_date": "2026-01-01"},
-        team_col="player_team", order_col="row_idx",
-    )
-    _SNK12_CACHE[sf_dir] = root
-    return root
+        payload = (
+            c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+            .select(
+                F.col("n_name").alias("player_team"),
+                F.col("c_custkey").alias("row_idx"),
+                (F.col("c_acctbal").cast("decimal(18,2)") * 100)
+                .cast("bigint")
+                .alias("cents"),
+            )
+        )
+        write_insights_tree(
+            payload, root, save_mode="by_team",
+            metadata={"scrape_date": "2026-01-01"},
+            team_col="player_team", order_col="row_idx",
+        )
+
+    return landing("snk12", sf_dir, ("nation", "customer"), build)
 
 
 @query(
@@ -605,42 +583,37 @@ def snk12_insights_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (sinks_ref.write_team_stats_tree — the bref CLI's sink)
 # ---------------------------------------------------------------------------
 
-_SNK13_CACHE: dict[str, str] = {}
-
-
 def _snk13_tree(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _SNK13_CACHE:
-        return _SNK13_CACHE[sf_dir]
     from nba_data_pipeline_spark.sinks_ref import write_team_stats_tree
 
-    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    c = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    s = read_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey", "s_acctbal"
-    )
-    roster = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
-        F.col("n_name").alias("team"),
-        F.col("c_custkey").alias("row_idx"),
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
-    )
-    advanced = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
-        F.col("n_name").alias("team"),
-        F.col("s_suppkey").alias("row_idx"),
-        (F.col("s_acctbal").cast("decimal(18,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
-    )
-    root = session_tmpdir("snk13_")
-    write_team_stats_tree(
-        [("Roster", roster), ("Advanced", advanced)],
-        root, season="2026", team_col="team", order_col="row_idx",
-    )
-    _SNK13_CACHE[sf_dir] = root
-    return root
+    def build(root: str) -> None:
+        n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+        c = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_nationkey", "c_acctbal"
+        )
+        s = read_table(spark, sf_dir, "supplier").select(
+            "s_suppkey", "s_nationkey", "s_acctbal"
+        )
+        roster = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
+            F.col("n_name").alias("team"),
+            F.col("c_custkey").alias("row_idx"),
+            (F.col("c_acctbal").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+            .alias("cents"),
+        )
+        advanced = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
+            F.col("n_name").alias("team"),
+            F.col("s_suppkey").alias("row_idx"),
+            (F.col("s_acctbal").cast("decimal(18,2)") * 100)
+            .cast("bigint")
+            .alias("cents"),
+        )
+        write_team_stats_tree(
+            [("Roster", roster), ("Advanced", advanced)],
+            root, season="2026", team_col="team", order_col="row_idx",
+        )
+
+    return landing("snk13", sf_dir, ("nation", "customer", "supplier"), build)
 
 
 @query(
@@ -719,17 +692,11 @@ def snk13_bref_stats_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (sinks_ref.write_dvp_matrix_doc — the dvp CLI's sink)
 # ---------------------------------------------------------------------------
 
-_SNK14_CACHE: dict[str, str] = {}
-
-_DVP_CANON_SQL = None  # built lazily from operators.dvp
-
-
 def _snk14_doc(spark: SparkSession, sf_dir: str) -> str:
     """Build the DIRTY DvP matrix from customer-bucket aggregates, run the
     full pipeline (X11 canonicalization + W1 LA rule → S5 all-or-nothing
-    gate → the combined nested document sink), and return the doc path."""
-    if sf_dir in _SNK14_CACHE:
-        return _SNK14_CACHE[sf_dir]
+    gate → the combined nested document sink), and return the landing root
+    holding the document."""
     from nba_data_pipeline_spark.operators.dvp import (
         DVP_ABBREVS,
         DVP_CANONICAL_TEAMS,
@@ -742,88 +709,88 @@ def _snk14_doc(spark: SparkSession, sf_dir: str) -> str:
     from nba_data_pipeline_spark.operators.enrich import canonicalize_teams
     from nba_data_pipeline_spark.sinks_ref import write_dvp_matrix_doc
 
-    b = (
-        read_table(spark, sf_dir, "customer")
-        .groupBy((F.col("c_custkey") % 30).alias("bi"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("c_custkey").alias("mn"),
-            (F.sum("c_custkey") % 100000).alias("sm"),
+    def build(root: str) -> None:
+        b = (
+            read_table(spark, sf_dir, "customer")
+            .groupBy((F.col("c_custkey") % 30).alias("bi"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("c_custkey").alias("mn"),
+                (F.sum("c_custkey") % 100000).alias("sm"),
+            )
         )
-    )
-    pos = spark.createDataFrame(
-        [(p, i) for i, p in enumerate(DVP_POSITIONS)], "position string, pi int"
-    )
-    tf = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(DVP_TIMEFRAMES)], "timeframe string, ti int"
-    )
-    canon_arr = F.array(*[F.lit(c) for c in DVP_CANONICAL_TEAMS])
-    city_paren = F.concat(
-        F.element_at(canon_arr, (F.col("bi") + 1).cast("int")),
-        F.lit(" (14-"), (F.col("bi") % 20).cast("string"), F.lit(")"),
-    )
-    abbr_arr = F.array(*[F.lit(a) for a in DVP_ABBREVS])
-    full_arr = F.array(*[F.lit(n) for n in DVP_FULL_NAMES])
-    variant = (F.col("bi") + F.col("pi") + F.col("ti")) % 4
-    la_first = DVP_CANONICAL_TEAMS.index("LA Lakers")
-    la_second = DVP_CANONICAL_TEAMS.index("LA Clippers")
-    team_raw = (
-        F.when(F.col("bi") == la_first, F.lit("Los Angeles"))
-        .when(F.col("bi") == la_second, F.lit("Los Angeles (22-10)"))
-        .when(variant == 0, F.upper(F.element_at(canon_arr, (F.col("bi") + 1).cast("int"))))
-        .when(variant == 1, city_paren)
-        .when(variant == 2, F.element_at(abbr_arr, (F.col("bi") + 1).cast("int")))
-        .otherwise(F.element_at(full_arr, (F.col("bi") + 1).cast("int")))
-    )
-    raw = (
-        b.crossJoin(F.broadcast(pos))
-        .crossJoin(F.broadcast(tf))
-        .select(
-            "position", "timeframe",
-            F.col("bi").alias("row_idx"),
-            team_raw.alias("team_raw"),
-            (F.col("n") + F.col("pi")).cast("string").alias("PTS"),
-            ((F.col("mn") + F.col("ti")) % 1000).cast("string").alias("REB"),
-            ((F.col("sm") + F.col("pi") * F.col("ti")) % 100000)
-            .cast("string").alias("AST"),
-            ((F.col("n") + F.col("ti")) % 50).cast("string").alias("3PM"),
-            ((F.col("mn") + F.col("pi")) % 97).cast("string").alias("STL"),
-            ((F.col("sm") + F.col("ti")) % 89).cast("string").alias("BLK"),
-            ((F.col("n") + F.col("pi") + F.col("ti")) % 23)
-            .cast("string").alias("TO"),
+        pos = spark.createDataFrame(
+            [(p, i) for i, p in enumerate(DVP_POSITIONS)], "position string, pi int"
         )
-    )
-    canon = canonicalize_teams(
-        raw,
-        dvp_alias_df(spark),
-        team_col="team_raw",
-        position_col=["position", "timeframe"],
-        row_idx_col="row_idx",
-        la_first="LA Lakers",
-        la_second="LA Clippers",
-    ).persist()
-    try:
-        validate_dvp_rows(canon)
-        root = session_tmpdir("snk14_")
-        write_dvp_matrix_doc(
-            canon.select(
-                F.col("team").alias("Team"),
-                F.col("position").alias("Position"),
-                F.col("timeframe").alias("Timeframe"),
-                "PTS", "REB", "AST", "3PM", "STL", "BLK", "TO",
-                "row_idx",
-            ),
-            root,
-            metadata={
-                "source": "bettingpros.com",
-                "url": "https://dvp.example/defense-vs-position",
-                "scraped_at": "2026-01-01T00:00:00",
-            },
+        tf = spark.createDataFrame(
+            [(t, i) for i, t in enumerate(DVP_TIMEFRAMES)], "timeframe string, ti int"
         )
-    finally:
-        canon.unpersist()
-    _SNK14_CACHE[sf_dir] = root
-    return root
+        canon_arr = F.array(*[F.lit(c) for c in DVP_CANONICAL_TEAMS])
+        city_paren = F.concat(
+            F.element_at(canon_arr, (F.col("bi") + 1).cast("int")),
+            F.lit(" (14-"), (F.col("bi") % 20).cast("string"), F.lit(")"),
+        )
+        abbr_arr = F.array(*[F.lit(a) for a in DVP_ABBREVS])
+        full_arr = F.array(*[F.lit(n) for n in DVP_FULL_NAMES])
+        variant = (F.col("bi") + F.col("pi") + F.col("ti")) % 4
+        la_first = DVP_CANONICAL_TEAMS.index("LA Lakers")
+        la_second = DVP_CANONICAL_TEAMS.index("LA Clippers")
+        team_raw = (
+            F.when(F.col("bi") == la_first, F.lit("Los Angeles"))
+            .when(F.col("bi") == la_second, F.lit("Los Angeles (22-10)"))
+            .when(variant == 0, F.upper(F.element_at(canon_arr, (F.col("bi") + 1).cast("int"))))
+            .when(variant == 1, city_paren)
+            .when(variant == 2, F.element_at(abbr_arr, (F.col("bi") + 1).cast("int")))
+            .otherwise(F.element_at(full_arr, (F.col("bi") + 1).cast("int")))
+        )
+        raw = (
+            b.crossJoin(F.broadcast(pos))
+            .crossJoin(F.broadcast(tf))
+            .select(
+                "position", "timeframe",
+                F.col("bi").alias("row_idx"),
+                team_raw.alias("team_raw"),
+                (F.col("n") + F.col("pi")).cast("string").alias("PTS"),
+                ((F.col("mn") + F.col("ti")) % 1000).cast("string").alias("REB"),
+                ((F.col("sm") + F.col("pi") * F.col("ti")) % 100000)
+                .cast("string").alias("AST"),
+                ((F.col("n") + F.col("ti")) % 50).cast("string").alias("3PM"),
+                ((F.col("mn") + F.col("pi")) % 97).cast("string").alias("STL"),
+                ((F.col("sm") + F.col("ti")) % 89).cast("string").alias("BLK"),
+                ((F.col("n") + F.col("pi") + F.col("ti")) % 23)
+                .cast("string").alias("TO"),
+            )
+        )
+        canon = canonicalize_teams(
+            raw,
+            dvp_alias_df(spark),
+            team_col="team_raw",
+            position_col=["position", "timeframe"],
+            row_idx_col="row_idx",
+            la_first="LA Lakers",
+            la_second="LA Clippers",
+        ).persist()
+        try:
+            validate_dvp_rows(canon)
+            write_dvp_matrix_doc(
+                canon.select(
+                    F.col("team").alias("Team"),
+                    F.col("position").alias("Position"),
+                    F.col("timeframe").alias("Timeframe"),
+                    "PTS", "REB", "AST", "3PM", "STL", "BLK", "TO",
+                    "row_idx",
+                ),
+                root,
+                metadata={
+                    "source": "bettingpros.com",
+                    "url": "https://dvp.example/defense-vs-position",
+                    "scraped_at": "2026-01-01T00:00:00",
+                },
+            )
+        finally:
+            canon.unpersist()
+
+    return landing("snk14", sf_dir, ("customer",), build)
 
 
 def _snk14_oracle_sql() -> str:

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table, session_tmpdir, table_stamp
+from nba_data_pipeline_spark.io import landing, read_table, table_path, table_stamp
 from nba_data_pipeline_spark.plans.exact import dsum, sql_dsum
 from nba_data_pipeline_spark.plans.registry import query
 from nba_data_pipeline_spark.sources.csv_source import read_csv_clean
@@ -49,7 +49,7 @@ _HTML_PAGE_HEAD = (
 )
 
 
-#: (sf_dir, supplier.parquet mtime) pairs already validated — the guard is a
+#: (sf_dir, supplier stamp) pairs already validated — the guard is a
 #: driver-side dim-table read, run once per process per data generation.
 _HTML_FIXTURE_OK: set[tuple[str, int]] = set()
 
@@ -66,7 +66,7 @@ def _guard_html_fixture(sf_dir: str) -> None:
     import pyarrow.parquet as pq
 
     names = (
-        pq.read_table(os.path.join(sf_dir, "supplier.parquet"), columns=["s_name"])
+        pq.read_table(table_path(sf_dir, "supplier"), columns=["s_name"])
         .column("s_name")
         .to_pylist()
     )
@@ -157,10 +157,6 @@ def src_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # + TABLE_NAME_MAP-style rename → aggregate
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, supplier.parquet mtime) → landed HTML dir (fixture synthesis,
-#: once per process per data generation — same cache posture as _land_csv).
-_HTML_BYID_CACHE: dict[tuple[str, int], str] = {}
-
 #: Table-id → friendly-name map, mirroring the reference's TABLE_NAME_MAP
 #: (get_basketball_stats_all_teams_Version6.py:55-82): extract only ids in
 #: the map, emit them under their friendly names.
@@ -175,50 +171,47 @@ def _land_html_by_id(sf_dir: str) -> str:
     the distributed htmltable DataSource scan."""
     import html as _html
 
-    cache_key = (sf_dir, table_stamp(sf_dir, "supplier"))
-    if cache_key in _HTML_BYID_CACHE:
-        return _HTML_BYID_CACHE[cache_key]
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "supplier.parquet"),
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    by_nation: dict[int, list[tuple[int, str, int]]] = {}
-    for key, name, nk, bal in zip(
-        tbl.column("s_suppkey").to_pylist(),
-        tbl.column("s_name").to_pylist(),
-        tbl.column("s_nationkey").to_pylist(),
-        tbl.column("s_acctbal").to_pylist(),
-    ):
-        cents = round(float(bal) * 100)
-        by_nation.setdefault(int(nk), []).append((int(key), name, int(cents)))
-    out_dir = session_tmpdir("src_html_by_id_")
-    for nk, rows in by_nation.items():
-        rows.sort()
-        roster = "".join(
-            f"<tr><td>{k}</td><td>{_html.escape(n, quote=False)}</td></tr>"
-            for k, n, _ in rows
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(
+            table_path(sf_dir, "supplier"),
+            columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
         )
-        poss = "".join(f"<tr><td>{k}</td><td>{c}</td></tr>" for k, _, c in rows)
-        page = (
-            "<html><body>"
-            # comment-embedded decoy: parsed (SRC2) but its id is not in
-            # the name map, so the by-id filter must drop it
-            '<!-- <table id="hidden_note"><tr><th>k</th></tr>'
-            "<tr><td>decoy</td></tr></table> -->"
-            # visible decoy without a mapped id
-            '<table id="nav"><tr><td>home</td></tr><tr><td>stats</td></tr></table>'
-            f'<table id="roster"><tr><th>suppkey</th><th>name</th></tr>{roster}</table>'
-            f'<table id="per_poss"><tr><th>suppkey</th><th>cents</th></tr>{poss}</table>'
-            "</body></html>"
-        )
-        with open(
-            os.path.join(out_dir, f"nation_{nk}.html"), "w", encoding="utf-8"
-        ) as f:
-            f.write(page)
-    _HTML_BYID_CACHE[cache_key] = out_dir
-    return out_dir
+        by_nation: dict[int, list[tuple[int, str, int]]] = {}
+        for key, name, nk, bal in zip(
+            tbl.column("s_suppkey").to_pylist(),
+            tbl.column("s_name").to_pylist(),
+            tbl.column("s_nationkey").to_pylist(),
+            tbl.column("s_acctbal").to_pylist(),
+        ):
+            cents = round(float(bal) * 100)
+            by_nation.setdefault(int(nk), []).append((int(key), name, int(cents)))
+        for nk, rows in by_nation.items():
+            rows.sort()
+            roster = "".join(
+                f"<tr><td>{k}</td><td>{_html.escape(n, quote=False)}</td></tr>"
+                for k, n, _ in rows
+            )
+            poss = "".join(f"<tr><td>{k}</td><td>{c}</td></tr>" for k, _, c in rows)
+            page = (
+                "<html><body>"
+                # comment-embedded decoy: parsed (SRC2) but its id is not in
+                # the name map, so the by-id filter must drop it
+                '<!-- <table id="hidden_note"><tr><th>k</th></tr>'
+                "<tr><td>decoy</td></tr></table> -->"
+                # visible decoy without a mapped id
+                '<table id="nav"><tr><td>home</td></tr><tr><td>stats</td></tr></table>'
+                f'<table id="roster"><tr><th>suppkey</th><th>name</th></tr>{roster}</table>'
+                f'<table id="per_poss"><tr><th>suppkey</th><th>cents</th></tr>{poss}</table>'
+                "</body></html>"
+            )
+            with open(
+                os.path.join(out_dir, f"nation_{nk}.html"), "w", encoding="utf-8"
+            ) as f:
+                f.write(page)
+
+    return landing("src_html_by_id", sf_dir, ("supplier",), build)
 
 
 @query(
@@ -288,10 +281,6 @@ def src_html_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # htmltable scan → aggregate (the first-touch seam, adapters/browser_ingest)
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, nation.parquet mtime) → landed HTML dir (same cache posture as
-#: _land_csv: fixture synthesis once per process per data generation).
-_TABWALK_CACHE: dict[tuple[str, int], str] = {}
-
 _TABWALK_TABS = ("roster", "codes")
 
 
@@ -315,68 +304,65 @@ def _land_browser_tabwalk(sf_dir: str) -> str:
         walk_tabs,
     )
 
-    cache_key = (sf_dir, table_stamp(sf_dir, "nation"))
-    if cache_key in _TABWALK_CACHE:
-        return _TABWALK_CACHE[cache_key]
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "nation.parquet"),
-        columns=["n_nationkey", "n_name", "n_regionkey"],
-    )
-    by_region: dict[int, list[tuple[int, str, int]]] = {}
-    for nk, name, rk in zip(
-        tbl.column("n_nationkey").to_pylist(),
-        tbl.column("n_name").to_pylist(),
-        tbl.column("n_regionkey").to_pylist(),
-    ):
-        by_region.setdefault(int(rk), []).append((int(nk), name, len(name or "")))
-
-    def page(rows_html: str, n_rows: int) -> str:
-        return (
-            "<html><body>"
-            '<!-- <table id="hidden"><tr><th>key</th></tr>'
-            "<tr><td>decoy</td></tr></table> -->"
-            '<table id="nav"><tr><th>Player</th></tr><tr><td>menu</td></tr></table>'
-            f'<table id="main"><tr><th>key</th><th>cell</th></tr>{rows_html}</table>'
-            "</body></html>"
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(
+            table_path(sf_dir, "nation"),
+            columns=["n_nationkey", "n_name", "n_regionkey"],
         )
+        by_region: dict[int, list[tuple[int, str, int]]] = {}
+        for nk, name, rk in zip(
+            tbl.column("n_nationkey").to_pylist(),
+            tbl.column("n_name").to_pylist(),
+            tbl.column("n_regionkey").to_pylist(),
+        ):
+            by_region.setdefault(int(rk), []).append((int(nk), name, len(name or "")))
 
-    pages: dict[str, list[str]] = {}
-    bases: dict[int, str] = {}
-    for rk, rows in sorted(by_region.items()):
-        rows.sort()
-        base = f"https://stats.test/region/{rk}"
-        bases[rk] = base
-        for tab in _TABWALK_TABS:
-            if tab == "roster":
-                cells = [(k, n) for k, n, _ in rows]
-            else:
-                cells = [(k, str(c)) for k, _, c in rows]
-            full = "".join(f"<tr><td>{k}</td><td>{v}</td></tr>" for k, v in cells)
-            part = "".join(
-                f"<tr><td>{k}</td><td>{v}</td></tr>" for k, v in cells[:1]
+        def page(rows_html: str, n_rows: int) -> str:
+            return (
+                "<html><body>"
+                '<!-- <table id="hidden"><tr><th>key</th></tr>'
+                "<tr><td>decoy</td></tr></table> -->"
+                '<table id="nav"><tr><th>Player</th></tr><tr><td>menu</td></tr></table>'
+                f'<table id="main"><tr><th>key</th><th>cell</th></tr>{rows_html}</table>'
+                "</body></html>"
             )
-            pages[f"{base}#tab-{tab}"] = [page(part, 1), page(full, len(cells))]
 
-    out_dir = session_tmpdir("src_browser_tabwalk_")
-    session = ScriptedSession(pages)
-    for rk, base in bases.items():
-        land_pages(
-            (
-                (f"region_{rk}_tab_{tab}", html)
-                for tab, html in walk_tabs(
-                    session,
-                    base,
-                    _TABWALK_TABS,
-                    required_headers=["KEY"],
-                    on_missing="raise",
-                    clock=session.clock,
-                    sleep=session.sleep,
+        pages: dict[str, list[str]] = {}
+        bases: dict[int, str] = {}
+        for rk, rows in sorted(by_region.items()):
+            rows.sort()
+            base = f"https://stats.test/region/{rk}"
+            bases[rk] = base
+            for tab in _TABWALK_TABS:
+                if tab == "roster":
+                    cells = [(k, n) for k, n, _ in rows]
+                else:
+                    cells = [(k, str(c)) for k, _, c in rows]
+                full = "".join(f"<tr><td>{k}</td><td>{v}</td></tr>" for k, v in cells)
+                part = "".join(
+                    f"<tr><td>{k}</td><td>{v}</td></tr>" for k, v in cells[:1]
                 )
-            ),
-            out_dir,
-        )
-    _TABWALK_CACHE[cache_key] = out_dir
-    return out_dir
+                pages[f"{base}#tab-{tab}"] = [page(part, 1), page(full, len(cells))]
+
+        session = ScriptedSession(pages)
+        for rk, base in bases.items():
+            land_pages(
+                (
+                    (f"region_{rk}_tab_{tab}", html)
+                    for tab, html in walk_tabs(
+                        session,
+                        base,
+                        _TABWALK_TABS,
+                        required_headers=["KEY"],
+                        on_missing="raise",
+                        clock=session.clock,
+                        sleep=session.sleep,
+                    )
+                ),
+                out_dir,
+            )
+
+    return landing("src_browser_tabwalk", sf_dir, ("nation",), build)
 
 
 @query(
@@ -443,12 +429,6 @@ def src_browser_tabwalk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC7: landed header-CSV with BOM + untrimmed cells → clean read → aggregate
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, customer.parquet mtime) → landed CSV dir (land once per process
-#: per data generation; the landing is fixture synthesis, not part of the
-#: measured read path — the mtime key keeps an in-process regeneration of
-#: the test data from serving stale landed files).
-_CSV_CACHE: dict[tuple[str, int], str] = {}
-
 _CSV_FILES = 4
 
 
@@ -457,38 +437,35 @@ def _land_csv(sf_dir: str) -> str:
     UTF-8 BOM on the header, padding blanks around header names and cells.
     Driver-side file synthesis (pyarrow, no Spark job) — bounded dim table,
     same posture as the streaming plans' file-landing fixture."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "customer"))
-    if cache_key in _CSV_CACHE:
-        return _CSV_CACHE[cache_key]
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "customer.parquet"),
-        columns=["c_custkey", "c_name", "c_mktsegment"],
-    )
-    rows = list(
-        zip(
-            tbl.column("c_custkey").to_pylist(),
-            tbl.column("c_name").to_pylist(),
-            tbl.column("c_mktsegment").to_pylist(),
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(
+            table_path(sf_dir, "customer"),
+            columns=["c_custkey", "c_name", "c_mktsegment"],
         )
-    )
-    out_dir = session_tmpdir("src_csv_roundtrip_")
-    header = "﻿c_custkey, c_name ,c_mktsegment\n"
-    for i in range(_CSV_FILES):
-        with open(os.path.join(out_dir, f"part-{i}.csv"), "w", encoding="utf-8") as f:
-            f.write(header)
-            for key, name, seg in rows[i::_CSV_FILES]:
-                # Fail loudly if a data regeneration ever makes the cells
-                # CSV-unsafe — a corrupted parse would otherwise surface as
-                # an opaque oracle hash mismatch downstream.
-                if any("," in v or "\n" in v or '"' in v for v in (name, seg)):
-                    raise ValueError(
-                        f"fixture cell needs CSV quoting: {name!r}, {seg!r}"
-                    )
-                f.write(f"{key},  {name}  , {seg}\n")
-    _CSV_CACHE[cache_key] = out_dir
-    return out_dir
+        rows = list(
+            zip(
+                tbl.column("c_custkey").to_pylist(),
+                tbl.column("c_name").to_pylist(),
+                tbl.column("c_mktsegment").to_pylist(),
+            )
+        )
+        header = "﻿c_custkey, c_name ,c_mktsegment\n"
+        for i in range(_CSV_FILES):
+            with open(os.path.join(out_dir, f"part-{i}.csv"), "w", encoding="utf-8") as f:
+                f.write(header)
+                for key, name, seg in rows[i::_CSV_FILES]:
+                    # Fail loudly if a data regeneration ever makes the cells
+                    # CSV-unsafe — a corrupted parse would otherwise surface as
+                    # an opaque oracle hash mismatch downstream.
+                    if any("," in v or "\n" in v or '"' in v for v in (name, seg)):
+                        raise ValueError(
+                            f"fixture cell needs CSV quoting: {name!r}, {seg!r}"
+                        )
+                    f.write(f"{key},  {name}  , {seg}\n")
+
+    return landing("src_csv_roundtrip", sf_dir, ("customer",), build)
 
 
 @query(
@@ -530,43 +507,36 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC4: raw HTTP GET → body parse → aggregate
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, nation.parquet mtime) → landed per-region CSV dir.
-_HTTP_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_region_csvs(sf_dir: str) -> str:
     """Land nation as one CSV file per region — the 'one URL per page'
     layout the reference fetches (lineup_scraper.py). Driver-side fixture
     synthesis over a dim table, same posture as _land_csv."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "nation"))
-    if cache_key in _HTTP_CACHE:
-        return _HTTP_CACHE[cache_key]
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "nation.parquet"),
-        columns=["n_nationkey", "n_name", "n_regionkey"],
-    )
-    rows = sorted(
-        zip(
-            tbl.column("n_nationkey").to_pylist(),
-            tbl.column("n_name").to_pylist(),
-            tbl.column("n_regionkey").to_pylist(),
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(
+            table_path(sf_dir, "nation"),
+            columns=["n_nationkey", "n_name", "n_regionkey"],
         )
-    )
-    out_dir = session_tmpdir("src_http_")
-    by_region: dict[int, list] = {}
-    for key, name, rk in rows:
-        if "," in name or "\n" in name:
-            raise ValueError(f"fixture cell needs CSV quoting: {name!r}")
-        by_region.setdefault(rk, []).append((key, name))
-    for rk, members in by_region.items():
-        with open(os.path.join(out_dir, f"region_{rk}.csv"), "w") as f:
-            f.write("n_nationkey,n_name\n")
-            for key, name in members:
-                f.write(f"{key},{name}\n")
-    _HTTP_CACHE[cache_key] = out_dir
-    return out_dir
+        rows = sorted(
+            zip(
+                tbl.column("n_nationkey").to_pylist(),
+                tbl.column("n_name").to_pylist(),
+                tbl.column("n_regionkey").to_pylist(),
+            )
+        )
+        by_region: dict[int, list] = {}
+        for key, name, rk in rows:
+            if "," in name or "\n" in name:
+                raise ValueError(f"fixture cell needs CSV quoting: {name!r}")
+            by_region.setdefault(rk, []).append((key, name))
+        for rk, members in by_region.items():
+            with open(os.path.join(out_dir, f"region_{rk}.csv"), "w") as f:
+                f.write("n_nationkey,n_name\n")
+                for key, name in members:
+                    f.write(f"{key},{name}\n")
+
+    return landing("src_http", sf_dir, ("nation",), build)
 
 
 @query(
@@ -626,11 +596,6 @@ def src_http_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-XML: native XML write → distributed XML scan → aggregate
 # ---------------------------------------------------------------------------
 
-#: (sf_dir, part.parquet mtime) → landed XML dir (land once per process per
-#: data generation, same cache posture as _land_csv).
-_XML_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_xml(spark: SparkSession, sf_dir: str) -> str:
     """Land ``part`` as an XML corpus via the DISTRIBUTED writer
     (``df.write.format("xml")``, built into Spark 4) — unlike the CSV/HTML
@@ -638,27 +603,26 @@ def _land_xml(spark: SparkSession, sf_dir: str) -> str:
     round-trip are executor-parallel jobs. The guard fails loudly if a data
     regeneration pads a text value with surrounding whitespace, which the
     XML reader's ignoreSurroundingSpaces default would silently strip (the
-    advisor-mandated posture of _land_csv/_guard_html_fixture)."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "part"))
-    if cache_key in _XML_CACHE:
-        return _XML_CACHE[cache_key]
-    p = read_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_brand", "p_size", "p_retailprice"
-    )
-    bad = p.filter(
-        (F.col("p_name") != F.trim("p_name")) | (F.col("p_brand") != F.trim("p_brand"))
-    ).count()
-    if bad:
-        raise ValueError(
-            "src_xml_roundtrip fixture needs whitespace-safe p_name/p_brand; "
-            f"XML surrounding-space trimming would corrupt {bad} rows"
+    same posture as _land_csv/_guard_html_fixture)."""
+
+    def build(root: str) -> None:
+        p = read_table(spark, sf_dir, "part").select(
+            "p_partkey", "p_name", "p_brand", "p_size", "p_retailprice"
         )
-    out = os.path.join(session_tmpdir("src_xml_"), "part_xml")
-    p.repartition(8).write.mode("overwrite").format("xml").option(
-        "rowTag", "part"
-    ).save(out)
-    _XML_CACHE[cache_key] = out
-    return out
+        bad = p.filter(
+            (F.col("p_name") != F.trim("p_name")) | (F.col("p_brand") != F.trim("p_brand"))
+        ).count()
+        if bad:
+            raise ValueError(
+                "src_xml_roundtrip fixture needs whitespace-safe p_name/p_brand; "
+                f"XML surrounding-space trimming would corrupt {bad} rows"
+            )
+        p.repartition(8).write.mode("overwrite").format("xml").option(
+            "rowTag", "part"
+        ).save(os.path.join(root, "part_xml"))
+
+    root = landing("src_xml", sf_dir, ("part",), build)
+    return os.path.join(root, "part_xml")
 
 
 @query(
@@ -774,26 +738,22 @@ def src_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-ORC: columnar ORC round-trip with predicate pushdown
 # ---------------------------------------------------------------------------
 
-_ORC_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_orc(spark: SparkSession, sf_dir: str) -> str:
     """Land lineitem as ORC via the distributed writer — the other
     columnar lake format (Hive-ecosystem tables a Spark engine must read
     in place rather than convert)."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "lineitem"))
-    if cache_key in _ORC_CACHE:
-        return _ORC_CACHE[cache_key]
-    out = os.path.join(session_tmpdir("src_orc_"), "lineitem_orc")
-    (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_quantity", "l_returnflag", "l_extendedprice")
-        .repartition(8)
-        .write.mode("overwrite")
-        .orc(out)
-    )
-    _ORC_CACHE[cache_key] = out
-    return out
+
+    def build(root: str) -> None:
+        (
+            read_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_suppkey", "l_quantity", "l_returnflag", "l_extendedprice")
+            .repartition(8)
+            .write.mode("overwrite")
+            .orc(os.path.join(root, "lineitem_orc"))
+        )
+
+    root = landing("src_orc", sf_dir, ("lineitem",), build)
+    return os.path.join(root, "lineitem_orc")
 
 
 @query(
@@ -836,34 +796,29 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-EVO: parquet schema evolution (mergeSchema read over drifted landings)
 # ---------------------------------------------------------------------------
 
-_EVO_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_evolved(spark: SparkSession, sf_dir: str) -> str:
     """Two landing generations of the same feed: v1 files carry
     (o_orderkey, o_orderstatus, o_totalprice); v2 files add
     o_orderpriority — the additive schema drift every long-lived landed
     dataset accumulates. Split by orderkey parity so both generations are
     fact-sized and interleaved."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "orders"))
-    if cache_key in _EVO_CACHE:
-        return _EVO_CACHE[cache_key]
-    root = session_tmpdir("src_evo_")
-    o = read_table(spark, sf_dir, "orders")
-    (
-        o.filter(F.col("o_orderkey") % 2 == 0)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "gen=v1"))
-    )
-    (
-        o.filter(F.col("o_orderkey") % 2 == 1)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "gen=v2"))
-    )
-    _EVO_CACHE[cache_key] = root
-    return root
+
+    def build(root: str) -> None:
+        o = read_table(spark, sf_dir, "orders")
+        (
+            o.filter(F.col("o_orderkey") % 2 == 0)
+            .select("o_orderkey", "o_orderstatus", "o_totalprice")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "gen=v1"))
+        )
+        (
+            o.filter(F.col("o_orderkey") % 2 == 1)
+            .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "gen=v2"))
+        )
+
+    return landing("src_evo", sf_dir, ("orders",), build)
 
 
 @query(
@@ -912,40 +867,34 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-PERM: permissive CSV read with corrupt-record quarantine
 # ---------------------------------------------------------------------------
 
-_PERM_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_dirty_csv(sf_dir: str) -> str:
     """Land supplier as CSV with every 7th data line deliberately mangled
     (wrong arity / non-numeric key) — the malformed-feed reality the
     reference's scrapers hit on layout drift. Driver-side dim-table
     synthesis, same posture as _land_csv."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "supplier"))
-    if cache_key in _PERM_CACHE:
-        return _PERM_CACHE[cache_key]
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "supplier.parquet"),
-        columns=["s_suppkey", "s_name", "s_nationkey"],
-    )
-    out_dir = session_tmpdir("src_perm_")
-    with open(os.path.join(out_dir, "feed.csv"), "w") as f:
-        f.write("s_suppkey,s_name,s_nationkey\n")
-        rows = zip(
-            tbl.column("s_suppkey").to_pylist(),
-            tbl.column("s_name").to_pylist(),
-            tbl.column("s_nationkey").to_pylist(),
+    def build(out_dir: str) -> None:
+        tbl = pq.read_table(
+            table_path(sf_dir, "supplier"),
+            columns=["s_suppkey", "s_name", "s_nationkey"],
         )
-        for key, name, nk in rows:
-            if "," in name or "\n" in name:
-                raise ValueError(f"fixture cell needs CSV quoting: {name!r}")
-            if key % 7 == 0:
-                f.write(f"OOPS-{key},{name}\n")  # bad key AND missing column
-            else:
-                f.write(f"{key},{name},{nk}\n")
-    _PERM_CACHE[cache_key] = out_dir
-    return out_dir
+        with open(os.path.join(out_dir, "feed.csv"), "w") as f:
+            f.write("s_suppkey,s_name,s_nationkey\n")
+            rows = zip(
+                tbl.column("s_suppkey").to_pylist(),
+                tbl.column("s_name").to_pylist(),
+                tbl.column("s_nationkey").to_pylist(),
+            )
+            for key, name, nk in rows:
+                if "," in name or "\n" in name:
+                    raise ValueError(f"fixture cell needs CSV quoting: {name!r}")
+                if key % 7 == 0:
+                    f.write(f"OOPS-{key},{name}\n")  # bad key AND missing column
+                else:
+                    f.write(f"{key},{name},{nk}\n")
+
+    return landing("src_perm", sf_dir, ("supplier",), build)
 
 
 @query(
@@ -1027,34 +976,27 @@ def src_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SRC-BIN: binaryFile scan — the raw-media ingestion source
 # ---------------------------------------------------------------------------
 
-_BIN_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _land_binary(spark: SparkSession, sf_dir: str) -> str:
     """One 64-byte binary blob per document (an md5 chain of doc_id),
     landed EXECUTOR-SIDE via foreachPartition — the fixture stand-in for
-    a crawl's raw image/audio payload directory. Cached per (sf_dir,
-    mtime) like the other landings so repeated catalog runs reuse it."""
-    cache_key = (sf_dir, table_stamp(sf_dir, "documents"))
-    if cache_key in _BIN_CACHE:
-        return _BIN_CACHE[cache_key]
-    root = session_tmpdir("src_bin_")
+    a crawl's raw image/audio payload directory."""
 
-    def write_part(rows) -> None:
-        import hashlib
+    def build(root: str) -> None:
+        def write_part(rows) -> None:
+            import hashlib
 
-        for row in rows:
-            payload = bytes.fromhex(
-                hashlib.md5(str(row.doc_id).encode()).hexdigest() * 4
-            )
-            with open(os.path.join(root, f"doc_{row.doc_id}.bin"), "wb") as f:
-                f.write(payload)
+            for row in rows:
+                payload = bytes.fromhex(
+                    hashlib.md5(str(row.doc_id).encode()).hexdigest() * 4
+                )
+                with open(os.path.join(root, f"doc_{row.doc_id}.bin"), "wb") as f:
+                    f.write(payload)
 
-    read_table(spark, sf_dir, "documents").select("doc_id").foreachPartition(
-        write_part
-    )
-    _BIN_CACHE[cache_key] = root
-    return root
+        read_table(spark, sf_dir, "documents").select("doc_id").foreachPartition(
+            write_part
+        )
+
+    return landing("src_bin", sf_dir, ("documents",), build)
 
 
 @query(

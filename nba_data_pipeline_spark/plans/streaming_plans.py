@@ -13,17 +13,16 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nba_data_pipeline_spark.io import (
+    landing,
     read_events,
     read_table,
     session_tmpdir,
     table_path,
-    table_stamp,
 )
 from nba_data_pipeline_spark.plans.exact import sql_dsum
 from nba_data_pipeline_spark.plans.registry import query
@@ -33,34 +32,13 @@ from nba_data_pipeline_spark.streaming.polling import (
     run_available_now,
 )
 
-# Landed-file directories, reused across runs within a session (keyed by
-# (prefix, sf_dir, source table stamp)): re-landing identical files per
-# invocation only adds I/O, and the stamp component means a regenerated
-# source table at the same path re-lands instead of serving stale bytes.
-# Checkpoints are NOT reused — availableNow against a drained checkpoint
-# would consider the files already processed.
-_LANDING_CACHE: dict[tuple[str, str, int], str] = {}
-
-
-def _landing(
-    prefix: str, sf_dir: str, build: Callable[[str], None], table: str = "events"
-) -> str:
-    """The cached landing dir for ``prefix`` over ``table``: on a miss,
-    ``build`` fills a fresh session tmpdir."""
-    key = (prefix, sf_dir, table_stamp(sf_dir, table))
-    if key not in _LANDING_CACHE:
-        land_dir = session_tmpdir(f"{prefix}_landing_")
-        build(land_dir)
-        _LANDING_CACHE[key] = land_dir
-    return _LANDING_CACHE[key]
-
 
 def _land(prefix: str, sf_dir: str, copies: int) -> str:
     def build(land_dir: str) -> None:
         for i in range(copies):
             shutil.copy(table_path(sf_dir, "events"), f"{land_dir}/arrival_{i + 1}.parquet")
 
-    return _landing(prefix, sf_dir, build)
+    return landing(prefix, sf_dir, ("events",), build)
 
 
 def _write_arrival(df: DataFrame, dst: str, mtime: int) -> None:
@@ -351,7 +329,7 @@ def _land_two_phase(sf_dir: str) -> str:
         os.utime(first, (1_700_000_000, 1_700_000_000))
         os.utime(second, (1_700_000_100, 1_700_000_100))
 
-    return _landing("s3", sf_dir, build)
+    return landing("s3", sf_dir, ("events",), build)
 
 
 @query(
@@ -552,7 +530,7 @@ def _land_restamped(spark: SparkSession, sf_dir: str) -> str:
         _write_arrival(e, f"{land_dir}/arrival_1.parquet", 1_700_000_000)
         _write_arrival(later, f"{land_dir}/arrival_2.parquet", 1_700_000_001)
 
-    return _landing("s10", sf_dir, build)
+    return landing("s10", sf_dir, ("events",), build)
 
 
 @query(
@@ -713,7 +691,7 @@ def s11_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFram
                 1_700_000_000 + parity,
             )
 
-    land = _landing("s11", sf_dir, build, table="documents")
+    land = landing("s11", sf_dir, ("documents",), build)
 
     store_dir = session_tmpdir("s11_store_")
     out_dir = session_tmpdir("s11_out_")
@@ -837,7 +815,7 @@ def _land_jsonl(sf_dir: str) -> str:
         for t in tmp:
             os.rename(t, t.removesuffix(".tmp"))
 
-    return _landing("s12", sf_dir, build)
+    return landing("s12", sf_dir, ("events",), build)
 
 
 @query(
@@ -910,7 +888,7 @@ def _land_with_sentinel(spark: SparkSession, sf_dir: str, prefix: str) -> str:
         )
         _write_arrival(sent, f"{land_dir}/sentinel_2.parquet", 1_700_000_002)
 
-    return _landing(prefix, sf_dir, build)
+    return landing(prefix, sf_dir, ("events",), build)
 
 
 @query(

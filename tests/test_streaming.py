@@ -114,17 +114,23 @@ def test_stability_tracker_stateful(spark, dirs):
     assert b_rows == [(0, 1, False)]
 
 
-def test_landing_cache_relands_when_source_changes(tmp_path):
-    """_LANDING_CACHE keys on the source table's stamp: regenerating the
-    events table at the same path within a session must produce a FRESH
-    landing (a stale landing would silently replay old bytes) — both for a
-    single-file table and for a directory table whose part file is
-    rewritten in place, which leaves the directory's own mtime alone."""
+def test_landing_cache_relands_when_source_changes(spark, tmp_path):
+    """``io.landing`` keys on the stamps of every table a landing reads:
+    regenerating a table at the same path within a session must produce a
+    FRESH landing (a stale landing would silently replay old bytes) — for a
+    single-file table, for a directory table whose part file is rewritten
+    in place (which leaves the directory's own mtime alone), and for the
+    sink trees: snk3 over ``orders``, and snk13 over nation, customer and
+    supplier with only ``supplier`` rewritten. An unchanged source reuses
+    the landing; after a rewrite the entry matches its DuckDB oracle."""
     import os
     import shutil
 
+    import duckdb
     import pyarrow.parquet as pq
 
+    from nba_data_pipeline_spark.plans import sinks
+    from nba_data_pipeline_spark.plans.registry import load_all
     from nba_data_pipeline_spark.plans.streaming_plans import _land, _land_jsonl
 
     sf_dir = str(tmp_path / "sf")
@@ -162,6 +168,44 @@ def test_landing_cache_relands_when_source_changes(tmp_path):
         with open(os.path.join(second, name)) as fh:
             landed += sum(1 for _ in fh)
     assert landed == 10
+
+    # sink trees over a writable copy of the fixture tables
+    sink_sf = str(tmp_path / "sf_sinks")
+    os.makedirs(sink_sf)
+    tables = ("orders", "nation", "customer", "supplier")
+    for t in tables:
+        shutil.copyfile(f"{SF_DIR}/{t}.parquet", os.path.join(sink_sf, f"{t}.parquet"))
+
+    def oracle_checked_rows(name):
+        con = duckdb.connect()
+        for t in tables:
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sink_sf}/{t}.parquet'")
+        spec = load_all()[name]
+        rel = con.sql(spec.oracle)
+        expected = sorted(rel.fetchall())
+        got = sorted(
+            tuple(r[c] for c in rel.columns) for r in spec.fn(spark, sink_sf).collect()
+        )
+        assert got and got == expected, name
+        return got
+
+    def halve_in_place(table):
+        path = os.path.join(sink_sf, f"{table}.parquet")
+        tbl = pq.read_table(path)
+        st = os.stat(path)
+        pq.write_table(tbl.slice(0, tbl.num_rows // 2), path)
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+
+    for name, land, rewritten in (
+        ("snk3_sink_modes", sinks._written_root, "orders"),
+        ("snk13_bref_stats_tree", sinks._snk13_tree, "supplier"),
+    ):
+        before = oracle_checked_rows(name)
+        first = land(spark, sink_sf)
+        assert land(spark, sink_sf) == first, name
+        halve_in_place(rewritten)
+        assert land(spark, sink_sf) != first, name
+        assert oracle_checked_rows(name) != before, name
 
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
