@@ -86,11 +86,11 @@ def streaming_checkpoint_dir(prefix: str) -> str:
 def table_row_count(sf_dir: str, name: str) -> int | None:
     """Row count from the parquet FOOTER — a driver-side stats probe, no
     Spark job. This is what size-adaptive plans (geo1's output-mass pin,
-    running_extreme's small-input cutover) consult before choosing a
-    strategy: on a warehouse it would be catalog statistics; on landed
-    files the footer metadata is the same number for free. Returns None
-    when the path isn't footer-readable (remote FS without pyarrow access)
-    so callers can fall back to a bounded ``df.count()``."""
+    running_extreme's small-input cutover) hand to :func:`fits` before
+    choosing a strategy: on a warehouse it would be catalog statistics; on
+    landed files the footer metadata is the same number for free. Returns
+    None when the path isn't footer-readable (remote FS without pyarrow
+    access), which :func:`fits` reads as "not small"."""
     try:
         import pyarrow.parquet as pq
 
@@ -108,11 +108,23 @@ def table_row_count(sf_dir: str, name: str) -> int | None:
     return None
 
 
+def fits(site: str, rows: int | None, limit: int) -> bool:
+    """The package's one size seam: True when a known ``rows`` is at most
+    ``limit``, so the fork named ``site`` may take its small-input branch.
+    An unknown size (``None``, e.g. an unreadable footer) is never small —
+    the scale branch is the one that is correct at every size. Callers
+    look this up as ``io.fits`` at call time, so patching the attribute
+    reaches every fork (``tests/test_size_forks.py`` forces each scale
+    branch that way)."""
+    return rows is not None and rows <= limit
+
+
 def table_col_minmax(sf_dir: str, name: str, col: str) -> tuple[int, int] | None:
     """(min, max) of ``col`` from parquet FOOTER statistics — a driver-side
     probe, zero data scan (same discipline as :func:`table_row_count`; on a
-    warehouse this is catalog column stats). Used by the chunked oracle
-    tool to derive key-range chunk bounds without a pre-pass over the fact.
+    warehouse this is catalog column stats). No catalog entry calls it; it
+    stays because the benchmark's traced run (``perfbench/tracing.py``)
+    wraps it by name as a footer probe.
     Returns None when any row group lacks statistics for the column."""
     try:
         import pyarrow.parquet as pq

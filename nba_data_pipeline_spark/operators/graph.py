@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nba_data_pipeline_spark import io
+
 __all__ = ["connected_components"]
 
 
@@ -124,10 +126,8 @@ def connected_components(
         ).select(
             F.col("node").alias("doc_id"), F.col("root").alias("component_id")
         )
-    if (
-        node_bound is not None
-        and node_bound * num_partitions <= finish_threshold
-    ):
+    pointer_rows = None if node_bound is None else node_bound * num_partitions
+    if io.fits("cc.two_level", pointer_rows, finish_threshold):
         # Two-level fast path (see docstring): sharded local DSU, then one
         # single-task DSU over the pointer rows as edges. repartition(1),
         # not coalesce(1): the level-2 exchange is what keeps level 1

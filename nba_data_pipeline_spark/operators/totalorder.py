@@ -75,6 +75,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window as W, WindowSpec
 from pyspark.sql import functions as F
 
+from nba_data_pipeline_spark import io
+
 __all__ = [
     "TOTAL_ORDER_SMALL_ROWS",
     "bounded_window",
@@ -105,8 +107,9 @@ SAMPLE_PER_BUCKET = 32
 #: customer table's footer row count), and the cut-sample job detects
 #: UNDERFLOW for free (it collects ≤ SAMPLE_PER_BUCKET×k rows; returning
 #: fewer proves the frame is exactly that small — e.g. ta_zipf's 31-word
-#: vocabulary). Both paths compute identical values: the bounded sweep is
-#: the same row_number/prefix-sum algebra over the same total order.
+#: vocabulary). Both tests go through :func:`io.fits`. Both paths compute
+#: identical values: the bounded sweep is the same row_number/prefix-sum
+#: algebra over the same total order.
 TOTAL_ORDER_SMALL_ROWS = 250_000
 
 OrderSpec = Sequence[str | tuple[str, str]]
@@ -216,7 +219,6 @@ def multi_ntile_exact(
     df: DataFrame,
     specs: Sequence[tuple[OrderSpec, int, str]],
     *,
-    cuts: Sequence[Sequence[tuple]] | None = None,
     num_partitions: int | None = None,
     small_hint_rows: int | None = None,
 ) -> DataFrame:
@@ -261,20 +263,15 @@ def multi_ntile_exact(
             raise ValueError("k_tiles must be >= 1")
     infos = [_norm_order(order) for order, _, _ in specs]
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if (
-        small_hint_rows is not None
-        and small_hint_rows <= TOTAL_ORDER_SMALL_ROWS
-    ):
+    if io.fits("multi_ntile.hint", small_hint_rows, TOTAL_ORDER_SMALL_ROWS):
         return _multi_ntile_bounded(df, specs, infos)
-    if cuts is None:
-        cuts, exact_n = _multi_order_cuts_probe(
-            df, [order for order, _, _ in specs], k
-        )
-        if exact_n is not None and exact_n <= TOTAL_ORDER_SMALL_ROWS:
-            # the sample returned the whole frame — its exact size is known
-            # for free and it is small; take the bounded sweep instead of
-            # the stats + per-metric boundary jobs
-            return _multi_ntile_bounded(df, specs, infos)
+    orders = [order for order, _, _ in specs]
+    cuts, exact_n = _multi_order_cuts_probe(df, orders, k)
+    if io.fits("multi_ntile.underflow", exact_n, TOTAL_ORDER_SMALL_ROWS):
+        # the sample returned the whole frame — its exact size is known
+        # for free and it is small; take the bounded sweep instead of
+        # the stats + per-metric boundary jobs
+        return _multi_ntile_bounded(df, specs, infos)
     bkts = [_bucket_expr(c, inf) for c, inf in zip(cuts, infos)]
     # one pass, all metrics: explode to (metric, bucket) micro-structs —
     # the partial aggregate collapses them to ≤ metrics×k rows map-side
@@ -369,7 +366,6 @@ def ntile_exact(
     k_tiles: int,
     *,
     tile_col: str,
-    cuts: Sequence[tuple] | None = None,
     num_partitions: int | None = None,
     small_hint_rows: int | None = None,
 ) -> DataFrame:
@@ -377,7 +373,6 @@ def ntile_exact(
     return multi_ntile_exact(
         df,
         [(order, k_tiles, tile_col)],
-        cuts=None if cuts is None else [cuts],
         num_partitions=num_partitions,
         small_hint_rows=small_hint_rows,
     )
@@ -513,6 +508,13 @@ def _sample_rows(df: DataFrame, names: Sequence[str], k: int):
     )
 
 
+def _underflow_rows(samp, k: int) -> int | None:
+    """The frame's exact row count when the bounded sample came back under
+    its ``SAMPLE_PER_BUCKET×k`` limit (the TakeOrderedAndProject saw every
+    row), else None."""
+    return len(samp) if len(samp) < SAMPLE_PER_BUCKET * k else None
+
+
 def _cuts_from_rows(samp, info: Sequence[tuple[str, str]], k: int):
     """Select k-1 order-space cut tuples from sampled rows (driver-side)."""
     if not samp:
@@ -567,7 +569,7 @@ def _multi_order_cuts_probe(
             if n not in names:
                 names.append(n)
     samp = _sample_rows(df, names, k)
-    exact_n = len(samp) if len(samp) < SAMPLE_PER_BUCKET * k else None
+    exact_n = _underflow_rows(samp, k)
     pos = {n: i for i, n in enumerate(names)}
     out = []
     for inf in infos:
@@ -654,10 +656,8 @@ def total_order(
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     part = list(part_cols)
 
-    if (
-        small_hint_rows is not None
-        and small_hint_rows <= TOTAL_ORDER_SMALL_ROWS
-        and not pin
+    if not pin and io.fits(
+        "total_order.hint", small_hint_rows, TOTAL_ORDER_SMALL_ROWS
     ):
         # stats-bounded frame: the bounded sweep needs no sample job and
         # no materialize checkpoint (it reads the input exactly once)
@@ -671,7 +671,9 @@ def total_order(
     if cuts is None:
         names = [n for n, _ in info]
         samp = _sample_rows(df, names, k)
-        if len(samp) < SAMPLE_PER_BUCKET * k and not pin:
+        if not pin and io.fits(
+            "total_order.underflow", _underflow_rows(samp, k), TOTAL_ORDER_SMALL_ROWS
+        ):
             # the sample returned the whole frame (see
             # _multi_order_cuts_probe): it is exactly this small, and the
             # checkpoint it just materialized feeds the bounded sweep
@@ -759,7 +761,6 @@ def running_extreme(
     *,
     agg: str = "max",
     num_partitions: int | None = None,
-    cuts: Sequence[tuple] | None = None,
     known_count: int | None = None,
 ) -> DataFrame:
     """Attach the EXCLUSIVE running max/min of ``value_col`` over a total
@@ -785,23 +786,20 @@ def running_extreme(
     task, so the sweep runs as a single audited ``bounded_window`` frame
     and skips the sample/stats/broadcast jobs entirely (VERDICT r8: sky1
     paid 6.5× at sf0.1 for machinery only the deep decades need). Callers
-    that already know the size pass ``known_count`` to skip the count job;
-    ``cuts`` (a pre-sampled boundary list) still forces the bucketed path."""
+    that already know the size pass ``known_count`` to skip the count job."""
     if agg not in ("max", "min"):
         raise ValueError(f"agg must be max/min, got {agg!r}")
     fagg = F.max if agg == "max" else F.min
     info = _norm_order(order)
-    if cuts is None:
-        n_rows = known_count if known_count is not None else df.count()
-        if n_rows <= RUNNING_EXTREME_SMALL_ROWS:
-            anchor = info[0][0]
-            sweep = bounded_window(*_order_exprs(info), anchor=anchor).rowsBetween(
-                W.unboundedPreceding, -1
-            )
-            return df.withColumn(out_col, fagg(F.col(value_col)).over(sweep))
+    n_rows = known_count if known_count is not None else df.count()
+    if io.fits("running_extreme.sweep", n_rows, RUNNING_EXTREME_SMALL_ROWS):
+        anchor = info[0][0]
+        sweep = bounded_window(*_order_exprs(info), anchor=anchor).rowsBetween(
+            W.unboundedPreceding, -1
+        )
+        return df.withColumn(out_col, fagg(F.col(value_col)).over(sweep))
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if cuts is None:
-        cuts = _collect_cuts(df, info, k)
+    cuts = _collect_cuts(df, info, k)
     tagged = df.withColumn(_BKT, _bucket_expr(cuts, info))
 
     lw = (

@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from nba_data_pipeline_spark import io
 from nba_data_pipeline_spark.io import read_table, table_row_count
 from nba_data_pipeline_spark.operators.totalorder import (
-    TOTAL_ORDER_SMALL_ROWS,
     bounded_window,
     multi_ntile_exact,
     total_order,
@@ -2441,10 +2441,8 @@ def a32_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that window is the guide-§2.5 "per-key window" wall — |groups| = 3
     # tasks each sort a third of the fact (measured 145.3 s at sf10 vs
     # 21.2 s for the bucketed form below, results byte-identical).
-    from nba_data_pipeline_spark.io import table_row_count
-
     n_rows = table_row_count(sf_dir, "lineitem")
-    if n_rows is not None and n_rows <= _A32_WINDOW_MAX_ROWS:
+    if io.fits("a32.window", n_rows, _A32_WINDOW_MAX_ROWS):
         wcum_all = (
             W.partitionBy("grp")
             .orderBy("cents", "l_orderkey", "l_linenumber")
@@ -3725,8 +3723,8 @@ def a43_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf100: counts 34 s / boundary 18 s on 10 of 32 cores → 4.4 s / 1.8 s
     # pinned). An explicit repartition is AQE-exempt; ~750k rows/task.
     par = spark.sparkContext.defaultParallelism
-    n_cust = table_row_count(sf_dir, "customer") or 0
-    n_parts = max(par, -(-n_cust // 750_000))
+    n_cust = table_row_count(sf_dir, "customer")
+    n_parts = max(par, -(-(n_cust or 0) // 750_000))
     base = (
         read_table(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderdate", "o_totalprice")
@@ -3738,15 +3736,11 @@ def a43_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("monetary_cents"),
         )
+        # pinned at every size: unpinned small frames measured no faster
+        # (sf0.01 0.83 vs 0.93 s, sf0.1 1.05 vs 1.04 s, within run spread)
+        .repartition(n_parts)
+        .localCheckpoint(eager=False)
     )
-    # The customer-grain frame is bounded by the customer table's footer
-    # row count. Small frames take multi_ntile_exact's bounded sweep (zero
-    # build jobs), where the pinned checkpoint would only add an exchange
-    # + a materialization job for passes that no longer exist; at scale the
-    # pin + checkpoint discipline is unchanged.
-    small = 0 < n_cust <= TOTAL_ORDER_SMALL_ROWS
-    if not small:
-        base = base.repartition(n_parts).localCheckpoint(eager=False)
     # No recency-anchor job: r_score is NTILE over recency DESC, and
     # recency = datediff(anchor, last_order) with a FIXED anchor is a
     # strictly decreasing bijection of last_order — so ordering by
@@ -3761,7 +3755,7 @@ def a43_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = multi_ntile_exact(
         base,
         [(ord_r, 5, "r_score"), (ord_f, 5, "f_score"), (ord_m, 5, "m_score")],
-        small_hint_rows=n_cust or None,
+        small_hint_rows=n_cust,
     ).select("o_custkey", "monetary_cents", "r_score", "f_score", "m_score")
     segment = (
         F.when((F.col("r_score") >= 4) & (F.col("f_score") >= 4), "champion")

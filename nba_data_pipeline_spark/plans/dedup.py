@@ -9,7 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table
+from nba_data_pipeline_spark import io
+from nba_data_pipeline_spark.io import read_table, table_row_count
 from nba_data_pipeline_spark.operators.dedup import (
     hashed_shingle_sets,
     jaccard_pairs,
@@ -147,23 +148,21 @@ HASHED_SHINGLE_PERSIST_DOCS = 2_000_000
 def _hashed_shingles_adaptive(sf_dir: str, d):
     """hashed_shingle_sets over ``d``, persisted only while the footer
     row count says the cache is an optimization rather than a liability
-    (the geo1 footer-probe discipline). Past the cutover the streaming
-    shingle pass re-runs per consumer — exchange reuse already shares the
-    expensive join-side exchange."""
-    from nba_data_pipeline_spark.io import table_row_count
-
+    (an unreadable footer counts as a liability). Past the cutover the
+    streaming shingle pass re-runs per consumer — exchange reuse already
+    shares the expensive join-side exchange."""
     sh = hashed_shingle_sets(d)
     n_docs = table_row_count(sf_dir, "documents")
-    if n_docs is None or n_docs <= HASHED_SHINGLE_PERSIST_DOCS:
+    if io.fits("dedup.shingle_cache", n_docs, HASHED_SHINGLE_PERSIST_DOCS):
         sh = sh.persist()
     return sh
 
 
 def cc_edges(sf_dir: str, d: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """Near-dup edge mining for the D6 closure entries (and their sampled
-    checker): exact Jaccard ≥ ``min_jaccard`` over hashed 3-word shingles,
-    as (src, dst) with src < dst — one shingle equi-join
-    (``jaccard_pairs``) over the footer-gated shingle relation
+    """Near-dup edge mining for the D6 closure entries: exact Jaccard ≥
+    ``min_jaccard`` over hashed 3-word shingles, as (src, dst) with
+    src < dst — one shingle equi-join (``jaccard_pairs``) over the
+    footer-gated shingle relation
     (``_hashed_shingles_adaptive``). The any-shared-shingle fan-out is the
     candidate generator and the whole graph fits one shuffle."""
     sh = _hashed_shingles_adaptive(sf_dir, d)
@@ -227,38 +226,23 @@ def d5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the scan's single row-group task
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    from nba_data_pipeline_spark.io import table_row_count
     from nba_data_pipeline_spark.operators.textops import distinct_word_shingles_fast
 
-    # Size-adaptive shingle materialization (footer probe, the d5_cc /
-    # geo1 discipline): on a SMALL corpus the (doc_id, sh_arr) cache is an
-    # optimization — signatures and both verify sides share one
-    # shingling pass. Past HASHED_SHINGLE_PERSIST_DOCS the cache itself is
-    # the hazard (sf300: ~70 GB of string arrays was this entry's
-    # single-box wall), so the corpus pass STREAMS into the signature
+    # No shingle cache: the corpus pass STREAMS into the signature
     # projection and the verify re-shingles only the LSH-filtered
-    # CANDIDATE docs — tiny relative to the corpus. Measured: sf0.1 keeps
-    # its ~1 s cached plan; sf300 flipped from box-bound to green
-    # (sampled oracle, 530.5 s).
+    # CANDIDATE docs — tiny relative to the corpus. A cached (doc_id,
+    # sh_arr) relation is the hazard at scale (sf300: ~70 GB of string
+    # arrays was this entry's single-box wall) and measured no faster on
+    # small corpora (sf0.01 0.76 vs 0.80 s, sf0.1 2.06 vs 2.18 s, within
+    # run spread).
     # Signatures straight off the arrays (array_min over transform): the
     # same min-of-md5 per seed, computed per-row in codegen — no explode
     # and no groupBy shuffle. (The r2 explode+agg form re-shuffled every
     # shingle row just to re-group what the array already groups; that was
     # the d5_minhash bench regression.)
-    n_docs = table_row_count(sf_dir, "documents")
-    small = n_docs is not None and n_docs <= HASHED_SHINGLE_PERSIST_DOCS
-    docs = None
-    if small:
-        docs = d.select(
-            "doc_id", distinct_word_shingles_fast(F.col("text")).alias("sh_arr")
-        ).persist()
-        sig = docs.select(
-            "doc_id", *minhash_signature(F.col("sh_arr"), _NUM_HASHES)
-        )
-    else:
-        sig = d.select(
-            "doc_id", distinct_word_shingles_fast(F.col("text")).alias("sh_arr")
-        ).select("doc_id", *minhash_signature(F.col("sh_arr"), _NUM_HASHES))
+    sig = d.select(
+        "doc_id", distinct_word_shingles_fast(F.col("text")).alias("sh_arr")
+    ).select("doc_id", *minhash_signature(F.col("sh_arr"), _NUM_HASHES))
     band_structs = [
         F.struct(
             F.lit(b).alias("band_idx"),
@@ -284,36 +268,27 @@ def d5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SQL oracle computes inter via the generic join; values identical.)
     # The candidate set is LSH-filtered and therefore tiny relative to the
     # corpus — broadcast it (and the cand-sized intermediate) so the
-    # corpus is never shuffled for the verify.
-    if small:
-        with_a = docs.select(
-            F.col("doc_id").alias("id_a"), F.col("sh_arr").alias("sh_a")
-        ).join(F.broadcast(cand), "id_a")
-        with_b = docs.select(
-            F.col("doc_id").alias("id_b"), F.col("sh_arr").alias("sh_b")
-        ).join(F.broadcast(with_a), "id_b")
-    else:
-        # streaming path: semi-join the raw corpus down to the docs that
-        # appear in some pair and re-shingle JUST those. cand is consumed
-        # three times (two id semi-joins + the pair attach) — checkpoint
-        # so the sig/band lineage runs once; tiny, pair ids only.
-        cand = cand.localCheckpoint(eager=False)
-        sh_a = d.join(
-            F.broadcast(cand.select(F.col("id_a").alias("doc_id")).distinct()),
-            "doc_id",
-        ).select(
-            F.col("doc_id").alias("id_a"),
-            distinct_word_shingles_fast(F.col("text")).alias("sh_a"),
-        )
-        sh_b = d.join(
-            F.broadcast(cand.select(F.col("id_b").alias("doc_id")).distinct()),
-            "doc_id",
-        ).select(
-            F.col("doc_id").alias("id_b"),
-            distinct_word_shingles_fast(F.col("text")).alias("sh_b"),
-        )
-        with_a = sh_a.join(F.broadcast(cand), "id_a")
-        with_b = sh_b.join(F.broadcast(with_a), "id_b")
+    # corpus is never shuffled for the verify. Semi-join the raw corpus
+    # down to the docs that appear in some pair and re-shingle JUST those.
+    # cand is consumed three times (two id semi-joins + the pair attach) —
+    # checkpoint so the sig/band lineage runs once; tiny, pair ids only.
+    cand = cand.localCheckpoint(eager=False)
+    sh_a = d.join(
+        F.broadcast(cand.select(F.col("id_a").alias("doc_id")).distinct()),
+        "doc_id",
+    ).select(
+        F.col("doc_id").alias("id_a"),
+        distinct_word_shingles_fast(F.col("text")).alias("sh_a"),
+    )
+    sh_b = d.join(
+        F.broadcast(cand.select(F.col("id_b").alias("doc_id")).distinct()),
+        "doc_id",
+    ).select(
+        F.col("doc_id").alias("id_b"),
+        distinct_word_shingles_fast(F.col("text")).alias("sh_b"),
+    )
+    with_a = sh_a.join(F.broadcast(cand), "id_a")
+    with_b = sh_b.join(F.broadcast(with_a), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jacc = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
     return (
@@ -473,8 +448,6 @@ def d5_embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline): the input is the unfiltered embeddings table, so the
     # parquet footer count IS the exact count — the one bounded sizing
     # job this docstring used to carve out disappears.
-    from nba_data_pipeline_spark.io import table_row_count
-
     pairs = cosine_pairs_blocked(
         v, _COS_THRESHOLD, known_count=table_row_count(sf_dir, "embeddings")
     )
@@ -602,8 +575,6 @@ def d5_cc_clusters_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-partition path this entry exists to prove, with zero joins
     # and zero driver actions); past it (sf30+, where 4×n_docs outgrows
     # one task's DSU budget) the general contraction loop runs.
-    from nba_data_pipeline_spark.io import table_row_count
-
     labels = connected_components(
         edges, num_partitions=4, node_bound=table_row_count(sf_dir, "documents")
     )
@@ -1005,17 +976,13 @@ def d9_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≥1 shingle), so the footer count is a sound upper bound and the
     # old docsets.count() — a full extra aggregate pass over the
     # persisted shingle relation at DataFrame-construction time — buys
-    # nothing. Falls back to the counting job only when footer stats are
-    # unavailable. Measured at sf0.1: one fewer job, ~0.5 s off the
-    # entry; the sf30/sf100 shuffle-hash crossover unchanged (footer
-    # count ≥ true count can only flip TOWARD the conservative shuffle
-    # path, and only in the sliver between the two counts).
-    from nba_data_pipeline_spark.io import table_row_count
-
+    # nothing; unreadable footer stats take the shuffle path. Measured at
+    # sf0.1: one fewer job, ~0.5 s off the entry; the sf30/sf100
+    # shuffle-hash crossover unchanged (footer count ≥ true count can
+    # only flip TOWARD the conservative shuffle path, and only in the
+    # sliver between the two counts).
     n_docsets = table_row_count(sf_dir, "documents")
-    if n_docsets is None:
-        n_docsets = docsets.count()
-    if n_docsets <= _D9_BROADCAST_DOCS:
+    if io.fits("d9.broadcast", n_docsets, _D9_BROADCAST_DOCS):
         side_a, side_b = F.broadcast(side_a), F.broadcast(side_b)
     else:
         # Shuffled HASH join, not sort-merge: the streamed side of these

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nba_data_pipeline_spark.io import read_table
+from nba_data_pipeline_spark.io import read_table, table_row_count
 from nba_data_pipeline_spark.plans.registry import query
 
 #: World is a 10 000 x 10 000 integer grid; the query radius equals the
@@ -113,33 +113,27 @@ def geo1_grid_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit = (F.col("home") == F.col("cell")) & (F.col("ka") < F.col("kb")) | (
         F.col("home") != F.col("cell")
     )
-    # PIN the join's partition count ONLY when the probe says the output
-    # needs it (r8 sf10 finding + r9 small-SF fix): the shuffle INPUT is
-    # small (5n rows), so AQE coalesces the join to a handful of
+    # PIN the join's partition count (r8 sf10 finding): the shuffle INPUT
+    # is small (5n rows), so AQE coalesces the join to a handful of
     # partitions — but the join OUTPUT explodes to n·density candidate
     # pairs inside those few tasks (2.5e9 at the 100x tiling → one-task
     # stragglers measured in hours). An explicit numPartitions repartition
     # is exempt from AQE coalescing, so per-task candidate mass stays
-    # bounded regardless of how small the pre-join bytes look. The count
-    # was previously static (defaultParallelism*4 at every SF), which made
-    # sf0.1 pay two extra shuffles for sf10's problem — now a footer-stats
-    # probe (zero Spark jobs; catalog statistics on a warehouse) derives
-    # the candidate estimate (points are md5-uniform over ~(GRID/RADIUS)^2
-    # cells, so 5·n²/cells is tight) and small inputs keep the plain AQE
-    # plan.
+    # bounded regardless of how small the pre-join bytes look. A
+    # footer-stats probe (zero Spark jobs; catalog statistics on a
+    # warehouse) sizes it from the candidate estimate (points are
+    # md5-uniform over ~(GRID/RADIUS)^2 cells, so 5·n²/cells is tight),
+    # floored at the session parallelism. Small inputs pin too: the plain
+    # AQE plan measured no faster at sf0.01 (0.40 vs 0.40 s) or sf0.1
+    # (0.59 vs 0.42 s).
     n_cells = (-(-GRID // RADIUS)) ** 2
-    from nba_data_pipeline_spark.io import table_row_count
-
-    n_pts = table_row_count(sf_dir, "customer")
-    if n_pts is None:
-        n_pts = pts.count()
-    est_candidates = 5 * n_pts * n_pts // max(n_cells, 1)
+    n_pts = table_row_count(sf_dir, "customer") or 0
+    est_candidates = 5 * n_pts * n_pts // n_cells
     target_per_task = 20_000_000
     par = left.sparkSession.sparkContext.defaultParallelism
-    if est_candidates > target_per_task * par:
-        shuffle_n = max(-(-est_candidates // target_per_task), par)
-        left = left.repartition(shuffle_n, "cell")
-        right = right.repartition(shuffle_n, "cell")
+    shuffle_n = max(-(-est_candidates // target_per_task), par)
+    left = left.repartition(shuffle_n, "cell")
+    right = right.repartition(shuffle_n, "cell")
     return (
         left.join(right, "cell")
         .filter(emit & (d2 <= RADIUS2))

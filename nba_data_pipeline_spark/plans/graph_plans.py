@@ -570,7 +570,13 @@ def g5_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver jobs on the wall (measured 2.4-2.6 s in-suite class); the
     # lazy chain materializes the whole peel in dependency order under
     # the final action and later consumers read the checkpoint blocks
-    # (steady 1.4-1.8 s, byte-identical results).
+    # (steady 1.4-1.8 s, byte-identical results). The survivor sets are
+    # broadcast explicitly: a lazy pin has no size at planning time, so
+    # AQE planned sort-merge joins and re-planned them to broadcast at run
+    # time depending on which query stages had already finished. The warm
+    # job count wandered 26-29 at sf0.1 on local[4] (a stable 26 with
+    # AQE's runtime broadcast conversion off); with the hint the plan is
+    # fixed at 20 jobs every run.
     cur = sym
     out = None
     for r in range(1, _G5_ROUNDS + 1):
@@ -583,8 +589,8 @@ def g5_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         cur = (
-            cur.join(surv.select(F.col("n").alias("u")), "u")
-            .join(surv.select(F.col("n").alias("v")), "v")
+            cur.join(F.broadcast(surv.select(F.col("n").alias("u"))), "u")
+            .join(F.broadcast(surv.select(F.col("n").alias("v"))), "v")
             .localCheckpoint(eager=False)
         )
         row = (

@@ -7,18 +7,20 @@ floats). Usage:
 
     python tools/check.py [name ...]              # default: all registered queries
     python tools/check.py --sf sf1                # full sweep at 10x (sf_scaled/sf1)
-    python tools/check.py --sf sf10 --lanes dedup,ann,text   # scale-lane presets
+    python tools/check.py --sf sf1 --lanes dedup,ann,text    # lane presets
     python tools/check.py --list-lanes            # show lane -> entry mapping
 
-Standing cadence (the discipline that caught the r6/r7 scale defects):
-  * full sf1 (10x) sweep at HEAD before any round close;
-  * sf10 (100x) lane sweep for any lane whose operators changed
-    (``--sf sf10 --lanes <lane>``);
-  * default sf0.01 full sweep after any catalog edit.
+Standing cadence:
+  * default sf0.01 full sweep after any catalog edit — it checks the
+    branch each size fork takes by default;
+  * the forced lane, ``python -m pytest tests/test_size_forks.py``, after
+    any catalog edit — it checks every fork's other branch (each
+    ``io.fits`` site forced to its scale side on sf0.001);
+  * full sf1 (10x) sweep at HEAD before any round close.
 
 ``--sf`` accepts a directory path or a shorthand: driver SFs
 (sf0.001/sf0.01/sf0.1) resolve to ``/root/testdata/<sf>``; scaled SFs
-(sf1/sf3/sf10) resolve to ``sf_scaled/<sf>`` (built on demand by
+(sf1/sf3) resolve to ``sf_scaled/<sf>`` (built on demand by
 ``tools/make_sf_scaled.py``).
 """
 
@@ -313,7 +315,7 @@ def compare(name: str, spark_df, duck_rel) -> list[str]:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("names", nargs="*", help="explicit query names (default: all)")
-    ap.add_argument("--sf", default=None, help="SF shorthand (sf0.01/sf1/sf10) or dir")
+    ap.add_argument("--sf", default=None, help="SF shorthand (sf0.01/sf1) or dir")
     ap.add_argument("--lanes", default=None, help="comma-separated lane presets")
     ap.add_argument("--list-lanes", action="store_true", help="print lane membership")
     ap.add_argument(
