@@ -1,8 +1,10 @@
 """Benchmark harness (driver contract): run the catalog's headline queries
-at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] and print
-ONE JSON line: {"metric", "value", "unit", "queries": {...}, "sf", "cpus"}. The
-stdout "queries" map holds only the 5 slowest (the driver's line capture
-truncates long lines); the full per-query map is written to bench_full.json.
+at $SPARK_GRAFT_SF_DIR (default sf0.1) on get_spark's session
+(local[$SPARK_GRAFT_CPUS], else all cores; "cpus" reads the session back) and
+print ONE JSON line: {"metric", "value", "unit", "queries": {...}, "sf",
+"cpus"}. The stdout "queries" map holds only the 5 slowest (the driver's line
+capture truncates long lines); the full per-query map is written to
+bench_full.json.
 
 Each query executes end-to-end via the noop sink (full plan runs, nothing
 collected to the driver), which is the honest distributed-execution time.
@@ -51,8 +53,8 @@ def warm_up(spark, sf_dir: str, cpus: int) -> None:
 
 
 def main() -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    spark = get_spark("bench", cpus=cpus)
+    spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
     specs = load_all()
     warm_up(spark, SF_DIR, cpus)
 

@@ -17,11 +17,6 @@ from pyspark.sql import functions as F
 ODDS_PATTERN = r"[+-]\d{3,4}"
 
 
-def extract_odds_all(c: Column) -> Column:
-    """All American-odds tokens (±3-4 digits) in a text blob → array<string>."""
-    return F.regexp_extract_all(c, F.lit(ODDS_PATTERN), 0)
-
-
 def extract_first_odds(c: Column) -> Column:
     """First odds token → int (null if absent)."""
     return F.nullif(F.regexp_extract(c, ODDS_PATTERN, 0), F.lit("")).try_cast("int")
@@ -35,19 +30,6 @@ def extract_prop_line(c: Column) -> Column:
     ou = F.regexp_extract(c, r"[OU]\s*(\d+\.?\d*)", 1)
     half = F.regexp_extract(c, r"(\d+\.5)", 1)
     return F.nullif(F.coalesce(F.nullif(ou, F.lit("")), half), F.lit("")).try_cast("double")
-
-
-# --- X3: matchup parse (nba_insights_scraper.py:397-404) ------------------
-
-
-def extract_matchup(c: Column) -> tuple[Column, Column, Column]:
-    """'UTA @ LAC' / 'UTA vs LAC' → (away, home, 'AWAY @ HOME')."""
-    away = F.regexp_extract(c, r"([A-Z]{3})\s*(?:@|vs\.?)\s*([A-Z]{3})", 1)
-    home = F.regexp_extract(c, r"([A-Z]{3})\s*(?:@|vs\.?)\s*([A-Z]{3})", 2)
-    matchup = F.when(
-        (away != "") & (home != ""), F.concat_ws(" @ ", away, home)
-    ).otherwise(F.lit(None))
-    return away, home, matchup
 
 
 # --- X7: hit-rate percent (nba_insights_scraper.py:467-471) ---------------

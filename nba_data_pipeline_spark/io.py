@@ -268,11 +268,3 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     name them exactly as the DuckDB oracle does."""
     for name in names:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_partitioned_json(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """SNK1/SNK2-style partitioned document sink (reference:
-    Cleaning_Glass_#1.py:479-489 folder tree) as a native partitioned write."""
-    df.write.mode(mode).partitionBy(*partition_cols).json(path)

@@ -81,7 +81,6 @@ __all__ = [
     "TOTAL_ORDER_SMALL_ROWS",
     "bounded_window",
     "multi_ntile_exact",
-    "multi_order_cuts",
     "ntile_exact",
     "ntile_from_rank",
     "total_order",
@@ -104,12 +103,12 @@ SAMPLE_PER_BUCKET = 32
 #: broadcast→shuffle verify crossover. The bound arrives two ways: callers
 #: pass ``small_hint_rows`` from parquet-footer/catalog stats (the geo1
 #: probe discipline — e.g. a customer-grain aggregate is bounded by the
-#: customer table's footer row count), and the cut-sample job detects
-#: UNDERFLOW for free (it collects ≤ SAMPLE_PER_BUCKET×k rows; returning
-#: fewer proves the frame is exactly that small — e.g. ta_zipf's 31-word
-#: vocabulary). Both tests go through :func:`io.fits`. Both paths compute
-#: identical values: the bounded sweep is the same row_number/prefix-sum
-#: algebra over the same total order.
+#: customer table's footer row count), and total_order's cut-sample job
+#: detects UNDERFLOW for free (it collects ≤ SAMPLE_PER_BUCKET×k rows;
+#: returning fewer proves the frame is exactly that small — e.g. ta_zipf's
+#: 31-word vocabulary). Both tests go through :func:`io.fits`. Both paths
+#: compute identical values: the bounded sweep is the same
+#: row_number/prefix-sum algebra over the same total order.
 TOTAL_ORDER_SMALL_ROWS = 250_000
 
 OrderSpec = Sequence[str | tuple[str, str]]
@@ -240,10 +239,8 @@ def multi_ntile_exact(
        a pure projection of k_tiles-1 literal lexicographic compares per
        metric, so ALL tile columns ride one downstream pass.
 
-    The full frame is never globally sorted and never re-shuffled. This is
-    what replaced a43's three chained :func:`total_order` ranks (sf300,
-    45M customers: 514 s un-pinned / 439 s with the AQE-exempt partition
-    pin → the boundary plan's handful of bounded passes).
+    The full frame is never globally sorted and never re-shuffled, and
+    one shared sample job yields every metric's bucket cuts.
 
     ``specs`` is a sequence of ``(order, k_tiles, tile_col)``. Ties cannot
     straddle tiles because callers pass TOTAL orders (unique tiebreaker),
@@ -265,13 +262,7 @@ def multi_ntile_exact(
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     if io.fits("multi_ntile.hint", small_hint_rows, TOTAL_ORDER_SMALL_ROWS):
         return _multi_ntile_bounded(df, specs, infos)
-    orders = [order for order, _, _ in specs]
-    cuts, exact_n = _multi_order_cuts_probe(df, orders, k)
-    if io.fits("multi_ntile.underflow", exact_n, TOTAL_ORDER_SMALL_ROWS):
-        # the sample returned the whole frame — its exact size is known
-        # for free and it is small; take the bounded sweep instead of
-        # the stats + per-metric boundary jobs
-        return _multi_ntile_bounded(df, specs, infos)
+    cuts = _shared_cuts(df, infos, k)
     bkts = [_bucket_expr(c, inf) for c, inf in zip(cuts, infos)]
     # one pass, all metrics: explode to (metric, bucket) micro-structs —
     # the partial aggregate collapses them to ≤ metrics×k rows map-side
@@ -478,11 +469,10 @@ def _bucket_expr(cuts, info: Sequence[tuple[str, str]]) -> Column:
     # #{cuts <= row}. _cuts_from_rows sorts them (including through desc
     # ties — _Rev.__eq__) so the tree stays balanced and adjacent
     # duplicate cuts dedupe, giving the ~log2(k) evaluated
-    # tuple-compares per row where the old sum form evaluated
-    # all k-1. Measured at sf100 (15M customer rows, k=32): the
-    # bucket-histogram pass dropped ~4x. Expression SIZE is unchanged
-    # (every compare appears once in the tree) — only the evaluated path
-    # shortens — so codegen behavior is no worse than the sum form.
+    # tuple-compares per row where the old sum form evaluated all k-1.
+    # Expression SIZE is unchanged (every compare appears once in the
+    # tree) — only the evaluated path shortens — so codegen behavior is no
+    # worse than the sum form.
     def tree(lo: int, hi: int) -> Column:
         # bucket index within cuts[lo:hi): lo + #{i in [lo,hi) : cut_i <= row}
         if lo == hi:
@@ -528,54 +518,25 @@ def _cuts_from_rows(samp, info: Sequence[tuple[str, str]], k: int):
     return cuts
 
 
-def _collect_cuts(df: DataFrame, info: Sequence[tuple[str, str]], k: int):
-    names = [n for n, _ in info]
-    return _cuts_from_rows(_sample_rows(df, names, k), info, k)
-
-
-def multi_order_cuts(
-    df: DataFrame,
-    orders: Sequence[OrderSpec],
-    *,
-    num_partitions: int | None = None,
+def _shared_cuts(
+    df: DataFrame, infos: Sequence[Sequence[tuple[str, str]]], k: int
 ) -> list[list[tuple]]:
-    """Cut tuples for SEVERAL total orders over the same frame from ONE
-    sample job.
-
-    :func:`total_order` pays one bounded sample pass per invocation; a plan
-    that ranks the same frame by three different keys (a43's R/F/M NTILEs)
-    would pay three full input passes for what is one uniform sample. This
-    helper collects a single xxhash64-ordered sample over the UNION of the
-    key columns and selects each ordering's cuts from it driver-side; feed
-    the results to ``total_order(..., cuts=...)``. Sample quality is
-    unchanged — the hash sample is uniform in every ordering's key space."""
-    k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    cuts, _ = _multi_order_cuts_probe(df, orders, k)
-    return cuts
-
-
-def _multi_order_cuts_probe(
-    df: DataFrame, orders: Sequence[OrderSpec], k: int
-) -> tuple[list[list[tuple]], int | None]:
-    """:func:`multi_order_cuts` plus the free smallness probe: when the
-    bounded sample comes back UNDER its limit, the frame's exact row count
-    is the sample length (the TakeOrderedAndProject saw every row) —
-    returned as ``exact_n`` so callers can cut over to the bounded sweep
-    without any extra job. ``None`` means the frame is at least limit-sized."""
-    infos = [_norm_order(o) for o in orders]
+    """Cut tuples for one or more total orders over the same frame from ONE
+    sample job: an xxhash64-ordered sample over the union of the key
+    columns, from which each order's cuts are selected driver-side. The
+    hash sample is uniform in every order's key space, so sharing it costs
+    no cut quality."""
     names: list[str] = []
     for inf in infos:
         for n, _ in inf:
             if n not in names:
                 names.append(n)
     samp = _sample_rows(df, names, k)
-    exact_n = _underflow_rows(samp, k)
     pos = {n: i for i, n in enumerate(names)}
-    out = []
-    for inf in infos:
-        proj = [tuple(row[pos[n]] for n, _ in inf) for row in samp]
-        out.append(_cuts_from_rows(proj, inf, k))
-    return out, exact_n
+    return [
+        _cuts_from_rows([tuple(row[pos[n]] for n, _ in inf) for row in samp], inf, k)
+        for inf in infos
+    ]
 
 
 def total_order(
@@ -589,8 +550,6 @@ def total_order(
     n_col: str | None = None,
     num_partitions: int | None = None,
     materialize: bool = False,
-    cuts: Sequence[tuple] | None = None,
-    pin: bool = False,
     small_hint_rows: int | None = None,
 ) -> DataFrame:
     """Attach exact global-order columns to ``df`` with no single-partition
@@ -612,11 +571,6 @@ def total_order(
     materialize : localCheckpoint the input first — set when the input has
         expensive lineage (a join/aggregate) so the sample/stats/data
         passes share one computation.
-    cuts : precomputed cut tuples (from :func:`multi_order_cuts`) — skips
-        this invocation's sample job entirely. Cut QUALITY only affects
-        bucket balance, never rank correctness (bucket membership is decided
-        by the Spark-side comparisons), so any cut list sampled from the
-        same frame is valid.
     small_hint_rows : an UPPER BOUND on the input's row count from catalog
         stats (parquet footer counts — the geo1 probe discipline). At or
         below :data:`TOTAL_ORDER_SMALL_ROWS` the rank/cum/totals algebra
@@ -626,19 +580,7 @@ def total_order(
         sorts in ~0.3 s. Independently, the cut-sample job detects
         underflow (sample smaller than its limit ⇒ the frame is exactly
         that small) and takes the same path for free — so e.g. a 31-row
-        vocabulary never pays the machinery even with no hint. Ignored
-        when ``pin=True`` (pin callers are by definition at fact scale).
-    pin : insert an explicit ``repartition(num_partitions, bucket, part)``
-        before the per-bucket window. An explicit numPartitions repartition
-        is exempt from AQE coalescing — without it AQE byte-targets the
-        window's hash exchange (64 MB partitions), which at skinny-row
-        fact-scale collapses k buckets into a fraction of the executor
-        pool and idles cores across every sequential window stage (the a43
-        sf300 finding: 30 M × 40 B rows → 18 partitions on 32 cores).
-        Leave off for small frames, where AQE's coalescing is the right
-        call; callers should derive the decision (and ``num_partitions``)
-        from footer row counts — the geo1 pattern
-        (plans/geo_plans.py:129-142).
+        vocabulary never pays the machinery even with no hint.
 
     .. note:: BUILD-TIME JOB — the cut-sample collect (and the lazy
        localCheckpoint when ``materialize=True``) runs a real Spark job at
@@ -656,9 +598,7 @@ def total_order(
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     part = list(part_cols)
 
-    if not pin and io.fits(
-        "total_order.hint", small_hint_rows, TOTAL_ORDER_SMALL_ROWS
-    ):
+    if io.fits("total_order.hint", small_hint_rows, TOTAL_ORDER_SMALL_ROWS):
         # stats-bounded frame: the bounded sweep needs no sample job and
         # no materialize checkpoint (it reads the input exactly once)
         return _total_order_bounded(
@@ -668,26 +608,17 @@ def total_order(
     if materialize:
         df = df.localCheckpoint(eager=False)
 
-    if cuts is None:
-        names = [n for n, _ in info]
-        samp = _sample_rows(df, names, k)
-        if not pin and io.fits(
-            "total_order.underflow", _underflow_rows(samp, k), TOTAL_ORDER_SMALL_ROWS
-        ):
-            # the sample returned the whole frame (see
-            # _multi_order_cuts_probe): it is exactly this small, and the
-            # checkpoint it just materialized feeds the bounded sweep
-            return _total_order_bounded(
-                df, info, part, rank_col, cum, totals, n_col
-            )
-        cuts = _cuts_from_rows(samp, info, k)
-    tagged = df.withColumn(_BKT, _bucket_expr(cuts, info))
-    if pin:
-        # AQE-exempt exchange: both the window branch and the stats
-        # aggregate read this one shuffle (reuse), each bucket lands whole
-        # in exactly one of k partitions, and the partition count cannot be
-        # byte-coalesced below the executor pool (see param doc).
-        tagged = tagged.repartition(k, F.col(_BKT), *[F.col(c) for c in part])
+    samp = _sample_rows(df, [n for n, _ in info], k)
+    if io.fits(
+        "total_order.underflow", _underflow_rows(samp, k), TOTAL_ORDER_SMALL_ROWS
+    ):
+        # the sample returned the whole frame (the TakeOrderedAndProject saw
+        # every row): it is exactly this small, and the checkpoint it just
+        # materialized feeds the bounded sweep
+        return _total_order_bounded(
+            df, info, part, rank_col, cum, totals, n_col
+        )
+    tagged = df.withColumn(_BKT, _bucket_expr(_cuts_from_rows(samp, info, k), info))
 
     lw = W.partitionBy(_BKT, *part).orderBy(*_order_exprs(info))
     lcw = lw.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -799,8 +730,7 @@ def running_extreme(
         )
         return df.withColumn(out_col, fagg(F.col(value_col)).over(sweep))
     k = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    cuts = _collect_cuts(df, info, k)
-    tagged = df.withColumn(_BKT, _bucket_expr(cuts, info))
+    tagged = df.withColumn(_BKT, _bucket_expr(_shared_cuts(df, [info], k)[0], info))
 
     lw = (
         W.partitionBy(_BKT)

@@ -3701,7 +3701,7 @@ def a43_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: orders collapse to customer grain in one partially
     aggregated shuffle (localCheckpointed — every later pass reads the
-    30M-row grain, not the fact table); the three NTILEs ride
+    customer grain, not the fact table); the three NTILEs ride
     ``operators/totalorder.ntile_exact`` — exact boundary selection
     (bucket-count histogram → k-1 boundary positions by integer
     arithmetic → sort ONLY the boundary buckets → tile as a pure
@@ -3710,10 +3710,7 @@ def a43_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE final pass into the ≤125-group contraction. All three cut lists
     come from ONE sample job and all three bucket histograms from ONE
     aggregate pass (multi_ntile_exact). No single-partition stage at any customer
-    cardinality. This replaced three chained total_order ranks: at sf300
-    (45M customers) the rank chain measured 514 s un-pinned / 439 s with
-    the AQE-exempt partition pin; the boundary plan needs none of that
-    window machinery."""
+    cardinality."""
     # The checkpoint's partition count is PINNED before it is written:
     # AQE byte-targets the customer-grain aggregate's output to ~40 B·n /
     # 64 MB partitions (10 at sf100, 18 at sf300), and every build-time

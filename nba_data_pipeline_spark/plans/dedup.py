@@ -231,10 +231,8 @@ def d5_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No shingle cache: the corpus pass STREAMS into the signature
     # projection and the verify re-shingles only the LSH-filtered
     # CANDIDATE docs — tiny relative to the corpus. A cached (doc_id,
-    # sh_arr) relation is the hazard at scale (sf300: ~70 GB of string
-    # arrays was this entry's single-box wall) and measured no faster on
-    # small corpora (sf0.01 0.76 vs 0.80 s, sf0.1 2.06 vs 2.18 s, within
-    # run spread).
+    # sh_arr) relation grows with the corpus and measured no faster
+    # (sf0.01 0.76 vs 0.80 s, sf0.1 2.06 vs 2.18 s, within run spread).
     # Signatures straight off the arrays (array_min over transform): the
     # same min-of-md5 per seed, computed per-row in codegen — no explode
     # and no groupBy shuffle. (The r2 explode+agg form re-shuffled every

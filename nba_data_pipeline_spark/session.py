@@ -35,20 +35,28 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _default_driver_memory() -> str:
-    """Half of the host's physical memory (MemTotal in /proc/meminfo),
-    capped at 16g — a local-mode driver heap that leaves room for the
-    Python workers and the page cache. 16g where /proc is unreadable."""
-    cap_mb = 16 * 1024
+def mem_total_mb() -> int | None:
+    """The host's physical memory in MiB (MemTotal in /proc/meminfo), or
+    None where /proc is unreadable. The one place that sizes a local run
+    from the host: the driver heap below and the DuckDB oracle in
+    ``tools/check.py`` both read it."""
     try:
         with open("/proc/meminfo") as f:
             for line in f:
                 if line.startswith("MemTotal:"):
-                    total_mb = int(line.split()[1]) // 1024
-                    return f"{min(cap_mb, total_mb // 2)}m"
+                    return int(line.split()[1]) // 1024
     except OSError:
         pass
-    return f"{cap_mb}m"
+    return None
+
+
+def _default_driver_memory() -> str:
+    """Half of the host's physical memory, capped at 16g — a local-mode
+    driver heap that leaves room for the Python workers and the page cache.
+    16g where /proc is unreadable."""
+    cap_mb = 16 * 1024
+    total_mb = mem_total_mb()
+    return f"{cap_mb if total_mb is None else min(cap_mb, total_mb // 2)}m"
 
 
 def get_spark(

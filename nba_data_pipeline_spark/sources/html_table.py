@@ -3,12 +3,11 @@
 The reference's densest source: pick the best visible <table> from a page,
 including tables hidden inside HTML comments
 (Cleaning_Glass_#1.py:382-428; Basketball_Refrence_alltables.py:226-234).
-Implemented dependency-free on stdlib html.parser:
-
-  * driver-side seam for one page → ``spark.createDataFrame``;
-  * distributed path for a corpus of pages: ``mapInPandas`` over a
-    DataFrame of (url, html) rows — each Arrow batch parses locally, no
-    driver round-trip, which is the 100 TB shape for landed HTML.
+Implemented dependency-free on stdlib html.parser. The distributed paths
+over a corpus of landed pages are :func:`html_corpus_cascade` (a
+``mapInPandas`` over (url, html) rows — each Arrow batch parses locally,
+no driver round-trip) and the ``htmltable`` data source
+(``sources/html_datasource.py``), which reads landed files per partition.
 
 Ingestion adapters (browser automation, retries) stay outside the engine
 (SURVEY §7.4) — input here is landed HTML text.
@@ -20,9 +19,7 @@ import re
 from collections.abc import Iterator
 from html.parser import HTMLParser
 
-from pyspark.sql import DataFrame, SparkSession
-
-from nba_data_pipeline_spark.operators.normalize import uniquify
+from pyspark.sql import DataFrame
 
 _COMMENT_RE = re.compile(r"<!--(.*?)-->", re.DOTALL)
 
@@ -189,51 +186,5 @@ def html_corpus_cascade(
                     for r_idx, row in enumerate(rows)
                 )
             yield pd.DataFrame(out, columns=[url_col, "row_idx", "headers", "cells"])
-
-    return df.mapInPandas(parse_batch, schema=schema)
-
-
-def _pad(row: list[str], n: int) -> list[str]:
-    return (row + [None] * n)[:n] if len(row) < n else row[:n]
-
-
-def html_table_to_df(spark: SparkSession, html: str, table_index: int | None = None) -> DataFrame:
-    """One landed page → DataFrame (driver-side seam). Headers are
-    uniquified (N3); all cells string-typed — run operators.normalize /
-    coerce_numeric downstream, mirroring the reference's pandas pass."""
-    tables = parse_html_tables(html)
-    if not tables:
-        raise ValueError("no tables found")
-    headers, rows = (
-        tables[table_index] if table_index is not None else best_table(tables)
-    )
-    names = uniquify([h or "col" for h in headers])
-    width = len(names)
-    return spark.createDataFrame([_pad(r, width) for r in rows], schema=names)
-
-
-def html_corpus_tables(df: DataFrame, html_col: str = "html", url_col: str = "url") -> DataFrame:
-    """Distributed UDTF path (UD3/UD5): a corpus of landed pages →
-    (url, table_idx, row_idx, header json, cells json) rows via mapInPandas.
-    row_idx preserves source order for order-dependent downstream ops
-    (SURVEY §7.3.1)."""
-    import json
-
-    import pandas as pd
-
-    schema = f"{url_col} string, table_idx int, row_idx int, headers string, cells string"
-
-    def parse_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for t_idx, (headers, rows) in enumerate(parse_html_tables(html)):
-                    for r_idx, row in enumerate(rows):
-                        out.append(
-                            (url, t_idx, r_idx, json.dumps(headers), json.dumps(row))
-                        )
-            yield pd.DataFrame(
-                out, columns=[url_col, "table_idx", "row_idx", "headers", "cells"]
-            )
 
     return df.mapInPandas(parse_batch, schema=schema)

@@ -73,14 +73,6 @@ def read_file_stream(
     return reader.load(source_dir)
 
 
-def dedupe_on_arrival(
-    df: DataFrame, keys: list[str], event_time: str, delay: str = "1 hour"
-) -> DataFrame:
-    """S2: arrival dedupe with bounded state — duplicates arriving within
-    the watermark delay are dropped; state for older keys is evicted."""
-    return df.withWatermark(event_time, delay).dropDuplicates([*keys, event_time])
-
-
 @contextlib.contextmanager
 def _small_state_shuffle(spark: SparkSession, n: int):
     """Stateful streaming cost here is per-partition state-store commit

@@ -238,10 +238,11 @@ def test_selenium_wrapper_is_duck_typed_without_the_library():
 
 def test_walked_tabs_land_and_parse_into_spark(spark, tmp_path):
     """The full seam: browser walk -> atomic landing -> the engine's
-    distributed html parser reads the landed corpus back, cell-exact."""
+    distributed html reader (the ``htmltable`` data source) reads the
+    landed corpus back, row-exact."""
     from pyspark.sql import functions as F
 
-    from nba_data_pipeline_spark.sources.html_table import html_corpus_tables
+    from nba_data_pipeline_spark.sources.html_datasource import register
 
     base = "https://example.test/team/1/stats"
     pages = {
@@ -261,17 +262,15 @@ def test_walked_tabs_land_and_parse_into_spark(spark, tmp_path):
         str(tmp_path / "landed"),
     )
     assert len(landed) == 2
-    corpus = spark.createDataFrame(
-        [(p, open(p, encoding="utf-8").read()) for p in landed],
-        "url string, html string",
-    )
+    register(spark)
     rows = (
-        html_corpus_tables(corpus)
-        .groupBy("url")
+        spark.read.format("htmltable")
+        .load(str(tmp_path / "landed"))
+        .groupBy("path")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    got = {os.path.basename(r["url"]): r["n"] for r in rows}
+    got = {os.path.basename(r["path"]): r["n"] for r in rows}
     assert got == {"tab_off.html": 3, "tab_def.html": 2}
 
 

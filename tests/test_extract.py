@@ -26,10 +26,9 @@ def _one(df, col, id_):
 
 
 def test_odds_extraction(cards):
-    df = cards.select("id", X.extract_first_odds(F.col("content")).alias("o"),
-                      X.extract_odds_all(F.col("content")).alias("all_o"))
+    df = cards.select("id", X.extract_first_odds(F.col("content")).alias("o"))
     assert _one(df, "o", 1) == -135
-    assert _one(df, "all_o", 2) == ["-110", "+250"]
+    assert _one(df, "o", 2) == -110
     assert _one(df, "o", 4) is None
 
 
@@ -38,14 +37,6 @@ def test_prop_line(cards):
     assert _one(df, "line", 1) == 3.5
     assert _one(df, "line", 2) == 25.5
     assert _one(df, "line", 4) is None
-
-
-def test_matchup(cards):
-    away, home, matchup = X.extract_matchup(F.col("content"))
-    df = cards.select("id", matchup.alias("m"))
-    assert _one(df, "m", 1) == "UTA @ LAC"
-    assert _one(df, "m", 3) == "CLE @ NYK"
-    assert _one(df, "m", 4) is None
 
 
 def test_hit_rate_book_spread(cards):

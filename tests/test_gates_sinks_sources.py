@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from nba_data_pipeline_spark.io import write_partitioned_json
 from nba_data_pipeline_spark.operators.gates import (
     CompletenessError,
     check_cell_presence,
@@ -15,8 +14,6 @@ from nba_data_pipeline_spark.operators.gates import (
 from nba_data_pipeline_spark.sources.csv_source import read_csv_clean
 from nba_data_pipeline_spark.sources.html_table import (
     best_table,
-    html_corpus_tables,
-    html_table_to_df,
     parse_html_tables,
 )
 
@@ -36,19 +33,6 @@ def test_parse_html_tables_includes_comments():
     headers, rows = best_table(tables)
     assert headers == ["Hidden"]  # 3 rows beats 2
     assert len(rows) == 3
-
-
-def test_html_table_to_df(spark):
-    df = html_table_to_df(spark, HTML, table_index=0)
-    assert df.columns == ["Team", "PTS"]
-    assert {r.Team for r in df.collect()} == {"Chicago", "Boston"}
-
-
-def test_html_corpus_distributed(spark):
-    corpus = spark.createDataFrame([("u1", HTML), ("u2", HTML)], ["url", "html"])
-    out = html_corpus_tables(corpus)
-    assert out.count() == 2 * (2 + 3)
-    assert out.filter("table_idx = 1").count() == 6
 
 
 def test_csv_bom_and_trim(spark, tmp_path):
@@ -91,18 +75,6 @@ def test_gated_write_blocks_partial(spark, tmp_path):
     ok = df.union(spark.createDataFrame([("SG", "B", 4)], df.schema))
     gated_write_parquet(ok, str(tmp_path / "out"), ["position"], ["position"], "team", 2)
     assert spark.read.parquet(str(tmp_path / "out")).count() == 4
-
-
-def test_partitioned_json_sink(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("CHI", "stats", "2024-01-01", 1), ("BOS", "stats", "2024-01-01", 2)],
-        ["team", "page", "scrape_date", "v"],
-    )
-    path = str(tmp_path / "tree")
-    write_partitioned_json(df, path, ["team", "page"])
-    assert (tmp_path / "tree" / "team=CHI" / "page=stats").exists()
-    back = spark.read.json(path)
-    assert back.count() == 2
 
 
 def test_html_datasource_format_reader(spark, tmp_path):

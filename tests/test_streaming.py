@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from nba_data_pipeline_spark.streaming.polling import (
-    dedupe_on_arrival,
     read_file_stream,
     run_available_now,
 )
@@ -62,7 +61,11 @@ def test_arrival_dedupe_with_watermark(spark, dirs):
         land,
         [(1, t0, "a"), (1, t0, "dup"), (2, t0, "b"), (2, t0, "dup"), (3, t0, "c")],
     )
-    sdf = dedupe_on_arrival(read_file_stream(spark, land, SCHEMA), ["event_id"], "ts")
+    sdf = (
+        read_file_stream(spark, land, SCHEMA)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates(["event_id", "ts"])
+    )
     run_available_now(sdf, sink, ckpt)
     out = spark.read.parquet(sink)
     assert out.count() == 3

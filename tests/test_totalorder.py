@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from nba_data_pipeline_spark.operators.totalorder import (
     bounded_window,
-    multi_order_cuts,
     ntile_from_rank,
     total_order,
 )
@@ -70,47 +69,6 @@ def test_rank_desc_and_nulls(spark):
         ).collect()
     }
     assert got == exp
-
-
-def test_multi_order_cuts_ranks_match_per_order_sampling(spark):
-    """One shared sample job must give the same exact ranks as per-order
-    sampling — cut choice affects bucket balance only, never ranks — for
-    asc/desc mixes and null-carrying keys."""
-    df, rows = _mkdf(spark, with_nulls=True)
-    orders = [
-        ["x", "key"],
-        [("x", "desc"), "key"],
-        [("w", "asc"), ("key", "asc")],
-    ]
-    cuts = multi_order_cuts(df, orders, num_partitions=7)
-    assert len(cuts) == 3
-    exp_asc = _expected_rank(rows)
-    exp_desc = _expected_rank(rows, desc=True)
-    got_asc = {
-        r["key"]: r["rnk"]
-        for r in total_order(
-            df, orders[0], rank_col="rnk", num_partitions=7, cuts=cuts[0]
-        ).collect()
-    }
-    got_desc = {
-        r["key"]: r["rnk"]
-        for r in total_order(
-            df, orders[1], rank_col="rnk", num_partitions=7, cuts=cuts[1]
-        ).collect()
-    }
-    assert got_asc == exp_asc
-    assert got_desc == exp_desc
-    exp_w = {
-        r[0]: i + 1
-        for i, r in enumerate(sorted(rows, key=lambda r: (r[3], r[0])))
-    }
-    got_w = {
-        r["key"]: r["rnk"]
-        for r in total_order(
-            df, orders[2], rank_col="rnk", num_partitions=7, cuts=cuts[2]
-        ).collect()
-    }
-    assert got_w == exp_w
 
 
 def test_rank_is_permutation_and_n(spark):
@@ -345,22 +303,6 @@ def test_running_extreme_no_unpartitioned_window(spark):
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "windowspecdefinition" in plan  # the windows are really there
         assert unpartitioned_window_specs(plan) == []
-
-
-def test_pin_ranks_match_and_exchange_is_aqe_exempt(spark):
-    """pin=True: ranks are unchanged, and the window's exchange comes from
-    an explicit numPartitions repartition (REPARTITION_BY_NUM), which AQE
-    cannot byte-coalesce below the requested count."""
-    df, rows = _mkdf(spark)
-    exp = _expected_rank(rows)
-    out = total_order(
-        df, ["x", "key"], rank_col="rnk", num_partitions=8, pin=True
-    )
-    got = {r["key"]: r["rnk"] for r in out.collect()}
-    assert got == exp
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in plan
-    assert "SinglePartition" not in plan
 
 
 def test_ntile_exact_matches_spark_ntile(spark):

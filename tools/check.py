@@ -22,6 +22,13 @@ Standing cadence:
 (sf0.001/sf0.01/sf0.1) resolve to ``/root/testdata/<sf>``; scaled SFs
 (sf1/sf3) resolve to ``sf_scaled/<sf>`` (built on demand by
 ``tools/make_sf_scaled.py``).
+
+Sizing follows the host, as every tool here does: the Spark session is
+``get_spark("check")`` — ``local[$SPARK_GRAFT_CPUS]``, else all cores, and
+a driver heap of half of MemTotal (at most 16g) unless
+``SPARK_DRIVER_MEMORY`` is set — and the DuckDB oracle gets a quarter of
+MemTotal as its memory limit, spilling to a temp dir past it. The header
+line prints the master the run got.
 """
 
 from __future__ import annotations
@@ -43,7 +50,7 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from nba_data_pipeline_spark.io import TABLES
-from nba_data_pipeline_spark.session import get_spark
+from nba_data_pipeline_spark.session import get_spark, mem_total_mb
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -82,36 +89,6 @@ def lane_members(names: list[str]) -> dict[str, list[str]]:
     return out
 
 
-def names_all_streaming(names: list[str], lanes: dict[str, list[str]]) -> bool:
-    streaming = set(lanes.get("streaming", ()))
-    return bool(names) and all(n in streaming for n in names)
-
-
-def streaming_worker_cap(
-    heap_gb: float | None = None, per_worker_gb: float = 4.5
-) -> int:
-    """Python-worker count the box can actually feed at a deep-decade
-    streaming drain: (MemAvailable − JVM heap) / measured per-worker peak.
-
-    The 4.5 GB/worker figure is the sf300 s11 measurement solved backward:
-    32 workers OOM'd and 16 ran clean on a 125 GB box with a 48 g heap —
-    (120 − 48) / 16 ≈ 4.5. On a box without /proc, falls back to cpu
-    count (no cap)."""
-    try:
-        with open("/proc/meminfo") as f:
-            kb = {
-                line.split(":")[0]: int(line.split()[1]) for line in f
-            }
-        avail_gb = kb["MemAvailable"] / 1024 / 1024
-    except Exception:  # noqa: BLE001
-        return os.cpu_count() or 8
-    if heap_gb is None:
-        m = re.match(r"(\d+)g", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        heap_gb = float(m.group(1)) if m else 48.0
-    usable = max(avail_gb - heap_gb, per_worker_gb)
-    return max(4, min(os.cpu_count() or 8, int(usable // per_worker_gb)))
-
-
 def resolve_sf(sf: str) -> str:
     """Shorthand SF name or directory path -> parquet directory."""
     if os.path.isdir(sf):
@@ -131,30 +108,30 @@ def resolve_sf(sf: str) -> str:
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    # Bound the oracle's memory and give it a spill dir: at the sf100
-    # (1000x) probe the CC oracle's recursive walk ballooned DuckDB to
-    # ~56 GB WHILE the Spark JVM still held its engine-phase RSS — the two
-    # engines' co-resident peaks exceeded the box and the OS OOM-killer
-    # took the JVM down mid-sweep. With a limit DuckDB spills (or fails
-    # that ONE entry cleanly) instead of detonating the whole lane.
-    duck_mem = os.environ.get("SPARK_GRAFT_DUCK_MEM", "40GB")
+    # Bound the oracle's memory and give it a spill dir. The Spark driver
+    # heap takes half of MemTotal and DuckDB's own default is 80% of it, so
+    # the two engines side by side would exceed the host; a quarter leaves
+    # room for the Python workers. Past the limit DuckDB spills (or fails
+    # that ONE entry cleanly) instead of the OS killing the JVM mid-sweep.
+    total_mb = mem_total_mb()
+    if total_mb:
+        con.sql(f"SET memory_limit='{total_mb // 4}MiB'")
     tmp = tempfile.mkdtemp(prefix="check_duck_spill_")
-    # an aborted deep-decade run must not strand a multi-GB spill dir in
-    # /tmp: best-effort rmtree at interpreter exit (normal completion leaves
-    # the dir empty anyway — DuckDB cleans its own spill files). atexit does
-    # NOT run on SIGTERM (how `timeout` kills a runaway entry — the r9
-    # sim_ivf sf300 kill stranded 22 GB), so route TERM through sys.exit.
+    # an aborted run must not strand a spill dir in /tmp: best-effort
+    # rmtree at interpreter exit (normal completion leaves the dir empty
+    # anyway — DuckDB cleans its own spill files). atexit does NOT run on
+    # SIGTERM (how `timeout` kills a runaway entry), so route TERM through
+    # sys.exit.
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     import signal
 
     if threading.current_thread() is threading.main_thread():
         signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
-    con.sql(f"SET memory_limit='{duck_mem}'")
     con.sql(f"SET temp_directory='{tmp}'")
-    # Deep-decade tilings are built PHASE-WISE (the full sf300 set outgrows
-    # one box's disk — see tools/make_sf_scaled.py --tables): register the
-    # tables that exist; an entry that reads a missing one fails with the
-    # usual missing-view error instead of blocking the whole connection.
+    # A partial tiling (tools/make_sf_scaled.py --tables, e.g. the
+    # documents-only sf1 set) holds only some tables: register the ones
+    # that exist; an entry that reads a missing one fails with the usual
+    # missing-view error instead of blocking the whole connection.
     missing = []
     for t in TABLES:
         if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
@@ -344,50 +321,12 @@ def main() -> int:
     if not names:
         names = list(qs)
     sf_dir = resolve_sf(args.sf) if args.sf else SF_DIR
-    print(f"# sf_dir={sf_dir}  entries={len(names)}", flush=True)
-
-    # Size the Spark session by the SWEEP DECADE, not a fixed 8-thread/16g
-    # default: the sf100 (1000x) probe showed a 16g/8-thread session dying
-    # inside a single candidate-join stage (GCLocker alloc failures, JVM
-    # OOM-kill) on a plan that runs in ~2 min at 32 threads / 64g — the
-    # harness, not the engine, was the 1000x bottleneck (the r8 lesson:
-    # at scale the harness joins the suspect list). Explicit env vars
-    # always win; the decade only moves the DEFAULTS.
-    m = re.search(r"sf(\d+)$", sf_dir)
-    decade = int(m.group(1)) if m else 0
-    default_cpus = os.cpu_count() or 8 if decade >= 10 else 8
-    # Deep-decade STREAMING runs: thread count is a first-class memory
-    # knob (BENCH_sf1 sixth decade — s11 at sf300 with 32 threads stacks
-    # one resident Arrow-worker peak per core and a Python worker dies;
-    # 16 ran clean). When every requested entry is in the streaming lane
-    # at decade >= 300, derive the worker count from the memory actually
-    # available to Python workers instead of requiring a hand-set
-    # SPARK_GRAFT_CPUS. Explicit env still wins.
-    if decade >= 300 and names_all_streaming(names, lanes):
-        default_cpus = min(default_cpus, streaming_worker_cap())
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or default_cpus
-    if decade >= 30 and not os.environ.get("SPARK_DRIVER_MEMORY"):
-        # past ~300x a 16g heap cannot hold one stage's execution memory at
-        # full thread count. 48g measured sufficient for the heaviest sf100
-        # engine phase (d5_cc's 1.27e9-row candidate join, spills cleanly);
-        # larger heaps LOWER survival — the JVM keeps its peak RSS while
-        # the DuckDB oracle runs, and 64g+40GB oracle+workers already
-        # brushed the 125g box (96g heap was OS-OOM-killed outright).
-        os.environ["SPARK_DRIVER_MEMORY"] = "48g"
-    extra = {}
-    if decade >= 30:
-        # zstd shuffle/spill compression: the deep decades' array-laden
-        # verify exchanges (d9's ~10^8 candidate rows x 0.4 KB docset
-        # arrays) are scratch-disk-bound on a single box under lz4; zstd
-        # buys ~2x on hash-array payloads for a few % CPU — the standard
-        # trade on shuffle-heavy clusters.
-        extra["spark.io.compression.codec"] = "zstd"
-    if os.environ.get("SPARK_GRAFT_EXTRA_FAULTHANDLER"):
-        # deep-decade worker-crash triage: dump the real Python traceback
-        # when an Arrow worker dies mid-task
-        extra["spark.python.worker.faulthandler.enabled"] = "true"
-        extra["spark.sql.execution.pyspark.udf.faulthandler.enabled"] = "true"
-    spark = get_spark("check", cpus=cpus, extra_conf=extra)
+    spark = get_spark("check")
+    print(
+        f"# sf_dir={sf_dir}  entries={len(names)}  "
+        f"master={spark.sparkContext.master}",
+        flush=True,
+    )
     con = duck_connect(sf_dir)
     failed = []
     for name in names:

@@ -185,7 +185,7 @@ def audit_one(name: str, df) -> list[str]:
 
 def main(argv: list[str]) -> int:
     tap = StderrTap()  # before get_spark: the JVM inherits fd 2 at spawn
-    spark = get_spark("planaudit", cpus=8)
+    spark = get_spark("planaudit")
     specs = load_all()
     names = argv or [n for n in specs if n not in SKIP]
     bad = 0

@@ -71,7 +71,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = [n for n in (want or list(qs)) if n in oracles]
-    spark = get_spark("typeaudit", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("typeaudit")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
